@@ -11,6 +11,43 @@ import os
 
 from pyspark.sql import SparkSession
 
+# Largest default driver heap; a bigger one is set explicitly.
+_MAX_DRIVER_HEAP = 16 << 30
+# cgroup v2 and v1 memory limits; "max" (v2) or a huge number (v1) means none.
+_CGROUP_MEMORY_LIMITS = (
+    "/sys/fs/cgroup/memory.max",
+    "/sys/fs/cgroup/memory/memory.limit_in_bytes",
+)
+
+
+def usable_memory_bytes(cgroup_files=_CGROUP_MEMORY_LIMITS) -> int:
+    """Memory this process may use: physical RAM, lowered by any numeric
+    cgroup memory limit."""
+    usable = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    for path in cgroup_files:
+        try:
+            with open(path) as f:
+                limit = f.read().strip()
+        except OSError:
+            continue
+        if limit.isdigit():
+            usable = min(usable, int(limit))
+    return usable
+
+
+def driver_memory(env=os.environ, usable_bytes: int | None = None) -> str:
+    """``spark.driver.memory``: ``$SPARK_GRAFT_DRIVER_MEM`` when set, else
+    min(16g, half the memory this process may use)."""
+    explicit = env.get("SPARK_GRAFT_DRIVER_MEM")
+    if explicit:
+        return explicit
+    if usable_bytes is None:
+        usable_bytes = usable_memory_bytes()
+    heap = usable_bytes // 2
+    if heap >= _MAX_DRIVER_HEAP:
+        return f"{_MAX_DRIVER_HEAP >> 30}g"
+    return f"{heap >> 20}m"
+
 
 def get_spark(app_name: str = "biodiversity-graph-db-spark") -> SparkSession:
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
@@ -47,10 +84,16 @@ def get_spark(app_name: str = "biodiversity-graph-db-spark") -> SparkSession:
         # Broadcast anything under 64 MB — dims here (region, nation,
         # supplier, part, the 14k-row time index) are all far below this.
         .config("spark.sql.autoBroadcastJoinThreshold", "64m")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
+        # Heap sized to the host: min(16g, half the usable memory).  The
+        # other half is headroom for the JVM's off-heap memory (~1.7 GB in
+        # the test session), the PySpark/Arrow Python workers and the
+        # calling Python process; a heap as large as the host lets the JVM
+        # grow until the kernel OOM-kills it.  On a cluster the deployment
+        # sets it through SPARK_GRAFT_DRIVER_MEM.
+        .config("spark.driver.memory", driver_memory())
         # localCheckpoint blocks are only unpersisted when the JVM GC
-        # collects their weak references (ContextCleaner); a 16g heap can
-        # go minutes without a full GC, so long multi-query sessions
+        # collects their weak references (ContextCleaner); a multi-GB heap
+        # can go minutes without a full GC, so long multi-query sessions
         # accumulate dead checkpoint/broadcast blocks until storage
         # eviction churn stalls live jobs.  Force the cleaner's periodic
         # GC often enough that dead blocks drain between queries.
