@@ -145,6 +145,10 @@ def pagerank(
             .cache()
         )
         n = nodes.count()
+        if n == 0:
+            # no vertices, no ranks (and no 1/n teleport base) — zero
+            # rows, as label_propagation and connected_components return
+            return nodes.select("key", F.lit(0).cast("long").alias("rank_micro"))
         d_pct = int(round(damping * 100))
         base = int((RANK_UNIT * (100 - d_pct)) // (100 * n))
         deg = e.groupBy("src").agg(F.count("*").alias("deg"))

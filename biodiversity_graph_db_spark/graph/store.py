@@ -20,10 +20,19 @@ from biodiversity_graph_db_spark.graph.schema import (
     NODES_SCHEMA,
     RELATION_SIGNATURES,
 )
+from biodiversity_graph_db_spark.operators._util import measured_cut, unsized
 
 
 class GraphIntegrityError(ValueError):
     pass
+
+
+def _measured(batch: DataFrame) -> DataFrame:
+    """A caller batch, ready to join: one whose plan Spark cannot size
+    (``spark.createDataFrame`` over local rows) comes back as a measured
+    cut, so the probe and every anti-join and commit over it plan it as
+    a broadcast, and its source is read once, not once per job."""
+    return measured_cut(batch) if unsized(batch) else batch
 
 
 @dataclass
@@ -40,10 +49,12 @@ class GraphStore:
 
     @classmethod
     def empty(cls, spark: SparkSession) -> "GraphStore":
+        # limit(0) optimizes to an empty LocalRelation, which Spark sizes
+        # at 0 bytes; the bare frames would be unsized Scan ExistingRDDs
         return cls(
             spark,
-            spark.createDataFrame([], NODES_SCHEMA),
-            spark.createDataFrame([], EDGES_SCHEMA),
+            spark.createDataFrame([], NODES_SCHEMA).limit(0),
+            spark.createDataFrame([], EDGES_SCHEMA).limit(0),
         )
 
     @classmethod
@@ -129,7 +140,9 @@ class GraphStore:
         existence check is a broadcast-friendly semi/anti join, not a scan
         loop as in the reference (Storage.fs:223-229 TODO).
         """
-        new_nodes = self._conform(new_nodes)
+        if on_conflict not in ("error", "skip"):
+            raise ValueError(on_conflict)
+        new_nodes = _measured(self._conform(new_nodes))
         if on_conflict == "error":
             # one probe job covers both invariants: existing-key conflict
             # and in-batch duplicates (A4 guard, Storage.fs:425-427)
@@ -147,19 +160,17 @@ class GraphStore:
             if bad:
                 raise GraphIntegrityError(f"{bad[0].why}: {bad[0].key}")
             fresh = new_nodes
-        elif on_conflict == "skip":
+        else:
             fresh = new_nodes.dropDuplicates(["key"]).join(
                 self.nodes, "key", "left_anti"
             )
-        else:
-            raise ValueError(on_conflict)
         return GraphStore(self.spark, self.nodes.unionByName(fresh), self.edges)
 
     def replace_node_data(self, replacements: DataFrame) -> "GraphStore":
         """U3 replaceNodeData/updateNode (Graph.fs:81-90; Storage.fs:277-283):
         swap payload columns for existing keys, keep adjacency (edges are a
         separate table, so adjacency is untouched by construction)."""
-        replacements = self._conform(replacements)
+        replacements = _measured(self._conform(replacements))
         missing = (
             replacements.join(self.nodes, "key", "left_anti").limit(1).collect()
         )
@@ -173,7 +184,7 @@ class GraphStore:
     def remove_nodes(self, keys: DataFrame) -> "GraphStore":
         """U4 removeNode (Graph.fs:119-132): delete nodes + cascade-delete
         every edge touching them (either direction)."""
-        keys = keys.select(F.col(keys.columns[0]).alias("key"))
+        keys = _measured(keys.select(F.col(keys.columns[0]).alias("key")))
         nodes = self.nodes.join(keys, "key", "left_anti")
         edges = (
             self.edges.join(

@@ -10,13 +10,17 @@ appends only the CHANGED rows (upserts + tombstones) partitioned by
 version, and any past state reconstructs with one latest-per-key window
 under a version partition filter.
 
-Scale shape per commit: the delta is ONE full-outer join per table on
-the storage key comparing an ``xxhash64`` over the payload columns —
-the exact SD1 diff plan (zero-Exchange on bucketed stores); log volume
-is ∝ change volume, never corpus size, and reads prune version
-partitions at the directory level.  This is the plain-parquet core of
-what Delta Lake wraps in transactional metadata (see the
-concurrent-writer contract, SCALE.md).
+Scale shape per commit: the committed store is cut once per table by
+``_util.measured_cut``, so the next head carries MEASURED statistics and
+a partition count derived from its bytes (one per advisory partition
+size).  The delta compares an ``xxhash64`` over the payload columns per
+storage key: two broadcast anti-joins (changed rows, removed keys) with
+no Exchange while both snapshots fit the broadcast threshold, else ONE
+full-outer join per table — the exact SD1 diff plan (zero-Exchange on
+bucketed stores).  Log volume is ∝ change volume, never corpus size,
+and reads prune version partitions at the directory level.  This is the
+plain-parquet core of what Delta Lake wraps in transactional metadata
+(see the concurrent-writer contract, SCALE.md).
 """
 
 from __future__ import annotations
@@ -31,6 +35,11 @@ from biodiversity_graph_db_spark.graph.schema import (
     NODES_SCHEMA,
 )
 from biodiversity_graph_db_spark.graph.store import GraphStore
+from biodiversity_graph_db_spark.operators._util import (
+    conf_bytes,
+    measured_cut,
+    plan_bytes,
+)
 from biodiversity_graph_db_spark.operators.snapshot import read_as_of
 
 #: edge identity — the same 4-tuple ``add_relations`` dedups on
@@ -59,8 +68,10 @@ def table_delta(
     rows for added/changed keys, plus tombstones (``deleted=true``, key
     cols only) for removed keys — exactly what ``save_version`` appends.
     Payload comparison is one map-side ``xxhash64`` over the non-key
-    columns, so the join shuffles (key, hash), not wide payloads (the
-    SD1 shape)."""
+    columns, so a join moves (key, hash), not wide payloads (the SD1
+    shape).  When both snapshots fit the broadcast threshold (measured
+    commit cuts do), the delta is two broadcast anti-joins and shuffles
+    nothing; otherwise one full-outer join."""
     val_cols = [c for c in old.columns if c not in key_cols]
     types = dict(old.dtypes)
     # NULL-SAFE key equality: edge identity includes the nullable
@@ -80,20 +91,27 @@ def table_delta(
     for k in key_cols:
         c = o[f"_ok_{k}"].eqNullSafe(n[f"_nk_{k}"])
         cond = c if cond is None else cond & c
-    j = o.join(n, cond, "full_outer")
-    # xxhash64 never returns NULL, so a NULL hash marks side absence
-    upserts = (
-        j.where(
+    threshold = conf_bytes(old.sparkSession, "spark.sql.autoBroadcastJoinThreshold")
+    if plan_bytes(old) <= threshold and plan_bytes(new) <= threshold:
+        # both snapshots fit a broadcast (measured commit cuts): two
+        # map-side anti-joins, no shuffle.  Same rows as the full-outer
+        # form below while each snapshot's keys are unique (the store's
+        # invariant).
+        changed = n.join(o, cond & (o["_oh"] == n["_nh"]), "left_anti")
+        gone = o.join(n, cond, "left_anti")
+    else:
+        j = o.join(n, cond, "full_outer")
+        # xxhash64 never returns NULL, so a NULL hash marks side absence
+        changed = j.where(
             F.col("_nh").isNotNull()
             & (F.col("_oh").isNull() | (F.col("_oh") != F.col("_nh")))
         )
-        .select(
-            *[F.col(f"_nk_{k}").alias(k) for k in key_cols],
-            *val_cols,
-        )
-        .withColumn("deleted", F.lit(False))
-    )
-    tombstones = j.where(F.col("_nh").isNull()).select(
+        gone = j.where(F.col("_nh").isNull())
+    upserts = changed.select(
+        *[F.col(f"_nk_{k}").alias(k) for k in key_cols],
+        *val_cols,
+    ).withColumn("deleted", F.lit(False))
+    tombstones = gone.select(
         *[F.col(f"_ok_{k}").alias(k) for k in key_cols],
         *[F.lit(None).cast(types[c]).alias(c) for c in val_cols],
         F.lit(True).alias("deleted"),
@@ -211,18 +229,19 @@ class VersionedGraphLog:
 
     def head_store(self) -> GraphStore:
         """The current head state as a live GraphStore — materialized
-        (localCheckpoint) and cached on first use, so repeat callers
+        (``measured_cut``: a lineage cut with measured statistics,
+        coalesced by size) and cached on first use, so repeat callers
         and ``commit``'s old side pay ONE log replay per reopen, not
-        one per use.  The single owner of the fast-path policy (the
-        streaming ingest and commit both resolve through here)."""
+        one per use, and every probe and delta against the head plans
+        it as a broadcast while it is small.  After a commit it is the
+        commit's own cut.  The single owner of the fast-path policy
+        (the streaming ingest and commit both resolve through here)."""
         if self._head == 0:
             return GraphStore.empty(self.spark)
         if self._head_store is None:
             store = self.read_version(self._head)
             self._head_store = GraphStore(
-                self.spark,
-                store.nodes.localCheckpoint(),
-                store.edges.localCheckpoint(),
+                self.spark, measured_cut(store.nodes), measured_cut(store.edges)
             )
         return self._head_store
 
@@ -345,11 +364,11 @@ class VersionedGraphLog:
             )
         # lineage cut (the G9 iterative pattern): the committed state is
         # diffed now AND serves as the next commit's old side — without
-        # this, commit k re-executes the whole k-deep mutation chain
+        # this, commit k re-executes the whole k-deep mutation chain.
+        # Measured, so the delta below and the next version's probes
+        # plan broadcasts, not sort-merge joins
         store = GraphStore(
-            self.spark,
-            store.nodes.localCheckpoint(),
-            store.edges.localCheckpoint(),
+            self.spark, measured_cut(store.nodes), measured_cut(store.edges)
         )
         # old side via head_store(): the previous commit's input when
         # cached, else ONE materialized log replay (reopened sessions)

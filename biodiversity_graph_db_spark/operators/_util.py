@@ -16,6 +16,8 @@ would widen the accumulator to DECIMAL(38,0) — same shape, wider type.
 
 from __future__ import annotations
 
+import re
+
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
@@ -179,3 +181,68 @@ def cut(df):
             )
         sc.setCheckpointDir(conf_dir)
     return df.checkpoint(eager=True)
+
+
+def plan_bytes(df) -> int:
+    """Catalyst's size estimate for ``df`` (``sizeInBytes`` of its
+    optimized plan) — what the planner compares against the broadcast
+    threshold."""
+    return df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
+
+
+_BYTE_UNITS = {"": 1, "k": 1 << 10, "m": 1 << 20, "g": 1 << 30, "t": 1 << 40, "p": 1 << 50}
+
+
+def conf_bytes(spark, key: str) -> int:
+    """A byte-size SQL conf ("64m", "10MB", "9223372036854775807b", "-1")
+    in bytes, read the way Spark reads it: binary units, no unit means
+    bytes, negative stays negative (a disabled threshold)."""
+    m = re.fullmatch(r"\s*(-?\d+)\s*([kmgtp]?)b?\s*", spark.conf.get(key), re.IGNORECASE)
+    if m is None:
+        raise ValueError(f"{key} is not a byte size: {spark.conf.get(key)!r}")
+    return int(m.group(1)) * _BYTE_UNITS[m.group(2).lower()]
+
+
+def unsized(df) -> bool:
+    """True when Spark cannot size ``df``'s plan: a source without
+    statistics (``spark.createDataFrame`` over local rows or an RDD
+    plans as ``Scan ExistingRDD``) estimates at
+    ``spark.sql.defaultSizeInBytes`` (8 EiB), and so does every union
+    or checkpoint over it — every join it feeds then plans as a
+    sort-merge join."""
+    return plan_bytes(df) >= conf_bytes(df.sparkSession, "spark.sql.defaultSizeInBytes")
+
+
+def measured_cut(df):
+    """``cut`` whose output carries MEASURED statistics — the write
+    path's materialization (graph mutations and versioned-log commits).
+
+    A checkpoint keeps its parent's size estimate, so ``cut`` of an
+    unsized plan is unsized too.  Here ``df`` is persisted first: the
+    cut's action fills the cache on its way to the checkpoint, the
+    cache's size accumulators give the checkpoint exact statistics, and
+    the cache is dropped once the checkpoint is taken.  Downstream joins
+    against the result plan as broadcasts when it is small, instead of
+    32-partition sort-merge joins whose every Exchange AQE runs as its
+    own job before re-planning.  For a caller batch or a broadcast-only
+    mutation chain, filling the cache and checkpointing are one job.
+
+    The result is coalesced to one partition per
+    ``spark.sql.adaptive.advisoryPartitionSizeInBytes`` of measured
+    data — without that, union chains (head ∪ batch ∪ batch …) grow
+    the partition count of every version.  A frame the caller already
+    persisted is cut as is and left persisted."""
+    owned = not df.is_cached
+    if owned:
+        df.persist()
+    try:
+        # cut a fresh Dataset: df's own query plan may predate the cache
+        # (a plan_bytes probe optimizes it), and would neither read nor
+        # fill it
+        out = cut(df.select("*"))
+    finally:
+        if owned:
+            df.unpersist()
+    target = conf_bytes(out.sparkSession, "spark.sql.adaptive.advisoryPartitionSizeInBytes")
+    n = max(1, -(-plan_bytes(out) // target))
+    return out.coalesce(n) if n < out.rdd.getNumPartitions() else out

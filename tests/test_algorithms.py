@@ -48,6 +48,15 @@ def test_pagerank_cycle_is_uniform(spark):
     assert len(set(ranks)) == 1
 
 
+def test_pagerank_empty_edge_set_is_zero_rows(spark):
+    # n = 0 vertices: zero rows with the usual schema, like LPA and CC
+    e = _edges(spark, [])
+    ranks = algorithms.pagerank(e)
+    assert ranks.collect() == []
+    assert ranks.dtypes == [("key", "string"), ("rank_micro", "bigint")]
+    assert algorithms.label_propagation(e).collect() == []
+
+
 def test_shortest_paths_path_graph(spark):
     e = _edges(spark, [("a", "b"), ("b", "c"), ("c", "d")])
     und = algorithms.undirect(e)

@@ -496,6 +496,104 @@ class TestVersionedGraph:
             shutil.rmtree(tmp, ignore_errors=True)
 
 
+class TestWritePathMaterialization:
+    """The write path's measured cuts (``_util.measured_cut``): coalesced
+    by measured size, no cache of their own left behind, and the delta
+    form their sizes select."""
+
+    @staticmethod
+    def _mutate(spark, store, v: int, keys: list[str]) -> tuple:
+        """Version ``v``: replace two live keys, remove one, add three."""
+        added = [f"taxonnode_v{v}_{i}" for i in range(3)]
+        if keys:
+            store = store.replace_node_data(
+                _nodes(spark, [(k, "TaxonNode", f"v{v}") for k in keys[:2]])
+            ).remove_nodes(spark.createDataFrame([(keys[2],)], "key string"))
+            keys = keys[:2] + keys[3:]
+        store = store.add_nodes(
+            _nodes(spark, [(k, "TaxonNode", f"v{v}") for k in added])
+        )
+        return store, keys + added
+
+    def test_head_partitions_stay_bounded_over_commits(self, spark, tmp_path):
+        """Broadcast anti-joins keep the partitioning of their stream
+        side, so head ∪ batch ∪ batch chains would grow the head's
+        partition count every version; the measured cut coalesces it to
+        one partition per advisory partition size."""
+        from biodiversity_graph_db_spark.graph.versioned import (
+            VersionedGraphLog,
+        )
+
+        log = VersionedGraphLog(spark, str(tmp_path))
+        keys: list[str] = []
+        counts = []
+        for v in range(1, 6):
+            store, keys = self._mutate(spark, log.head_store(), v, keys)
+            assert log.commit(store) == v
+            counts.append(log.head_store().nodes.rdd.getNumPartitions())
+        assert counts == [1] * 5
+        assert sorted(r.key for r in log.read_version(5).nodes.collect()) == sorted(keys)
+
+    def test_commit_leaves_no_persisted_frame(self, spark, tmp_path):
+        """Every block the write path leaves persisted after a commit is
+        a lineage cut (freed once its frame is dropped); none is a cache
+        the measuring persisted."""
+        from biodiversity_graph_db_spark.graph.versioned import (
+            VersionedGraphLog,
+        )
+
+        sc = spark.sparkContext
+        log = VersionedGraphLog(spark, str(tmp_path))
+        store, keys = self._mutate(spark, log.head_store(), 1, [])
+        log.commit(store)
+        before = set(sc._jsc.getPersistentRDDs().keys())
+        store, keys = self._mutate(spark, log.head_store(), 2, keys)
+        log.commit(store)
+        rdds = sc._jsc.getPersistentRDDs()
+        left = [rdds[i].rdd() for i in set(rdds.keys()) - before]
+        assert left, "the commit cuts should be persisted"
+        assert [r.toDebugString() for r in left if not r.isCheckpointed()] == []
+
+    def test_delta_forms_agree(self, spark):
+        """``table_delta`` plans two broadcast anti-joins when both
+        snapshots fit the broadcast threshold and one full-outer join
+        otherwise (forced here by disabling broadcasts); both append the
+        same rows, null-payload edge keys included."""
+        from biodiversity_graph_db_spark.graph.versioned import (
+            EDGE_KEY,
+            table_delta,
+        )
+        from biodiversity_graph_db_spark.operators._util import measured_cut
+
+        schema = "source_key string, sink_key string, relation string, payload string, weight int"
+        old = measured_cut(spark.createDataFrame(
+            [("a", "b", "IsA", None, 1), ("a", "c", "IsA", None, 1),
+             ("b", "c", "IsA", "x", 1), ("c", "d", "IsA", "y", 1)], schema))
+        new = measured_cut(spark.createDataFrame(
+            [("a", "b", "IsA", None, 1), ("a", "c", "IsA", None, 2),
+             ("b", "c", "IsA", "x", 1), ("d", "e", "IsA", None, 1)], schema))
+
+        def delta():
+            df = table_delta(old, new, list(EDGE_KEY))
+            plan = df._jdf.queryExecution().executedPlan().toString()
+            return "FullOuter" in plan, sorted(map(tuple, df.collect()), key=repr)
+
+        key = "spark.sql.autoBroadcastJoinThreshold"
+        threshold = spark.conf.get(key)
+        anti = delta()
+        spark.conf.set(key, "-1")
+        try:
+            outer = delta()
+        finally:
+            spark.conf.set(key, threshold)
+        assert (anti[0], outer[0]) == (False, True)
+        assert anti[1] == outer[1] == sorted([
+            ("a", "c", "IsA", None, 2, False),
+            ("d", "e", "IsA", None, 1, False),
+            ("c", "d", "IsA", "y", None, True),
+        ], key=repr)
+
+
 class TestGraphLogCompaction:
     def test_reads_survive_compaction(self, spark, seeded):
         """Compacting versions <= 2 must leave read_version(2) and (3)

@@ -1942,3 +1942,125 @@ class TestScaleSafeGeoPlans:
         assert partial_before_exchange or no_candidate_shuffle
         assert "CartesianProduct" not in plan
         assert "BroadcastNestedLoopJoin" not in plan
+
+
+class TestWritePathPlans:
+    """The graph write path — ``GraphStore`` mutations on caller batches
+    Spark cannot size (``createDataFrame`` over local rows), then
+    ``VersionedGraphLog.commit`` — must plan its probes and cuts as
+    broadcast joins against measured cuts (``_util.measured_cut``),
+    never as sort-merge joins."""
+
+    @staticmethod
+    def _nodes(spark, keys, name):
+        return spark.createDataFrame(
+            [(k, "TaxonNode", f"{name} {k}") for k in keys],
+            "key string, node_type string, pretty_name string",
+        )
+
+    @staticmethod
+    def _spy_plans(monkeypatch, cls) -> list[str]:
+        """Record the physical plan of every collect / cut on ``cls``."""
+        plans: list[str] = []
+        for name in ("collect", "localCheckpoint", "checkpoint"):
+            orig = getattr(cls, name)
+
+            def spy(df, *args, _orig=orig, **kwargs):
+                plans.append(df._jdf.queryExecution().executedPlan().toString())
+                return _orig(df, *args, **kwargs)
+
+            monkeypatch.setattr(cls, name, spy)
+        return plans
+
+    def test_mutations_and_commit_plan_no_sort_merge_join(
+        self, spark, tmp_path, monkeypatch
+    ):
+        from biodiversity_graph_db_spark.graph.store import GraphStore
+        from biodiversity_graph_db_spark.graph.versioned import (
+            VersionedGraphLog,
+            table_delta,
+        )
+
+        keys = [f"taxonnode_{i:03d}" for i in range(30)]
+        added = [f"taxonnode_new_{i}" for i in range(5)]
+        log = VersionedGraphLog(spark, str(tmp_path / "log"))
+        log.commit(GraphStore.empty(spark).add_nodes(self._nodes(spark, keys, "v1")))
+        old = log.head_store()
+
+        plans = self._spy_plans(monkeypatch, type(old.nodes))
+        g = (
+            old.replace_node_data(self._nodes(spark, keys[:10], "v2"))
+            .remove_nodes(
+                spark.createDataFrame([(k,) for k in keys[10:15]], "key string")
+            )
+            .add_nodes(self._nodes(spark, added, "v2"))
+        )
+        assert log.commit(g) == 2
+        monkeypatch.undo()
+
+        assert not [p for p in plans if "SortMergeJoin" in p]
+        # three batch cuts, the replace and add probes, two commit cuts
+        assert len(plans) >= 7, plans
+        new = log.head_store()
+        delta = table_delta(old.nodes, new.nodes, ["key"])
+        delta_plan = delta._jdf.queryExecution().executedPlan().toString()
+        assert "SortMergeJoin" not in delta_plan
+        assert "Exchange" not in delta_plan.replace("BroadcastExchange", "")
+
+        want = {k: f"v2 {k}" for k in keys[:10] + added}
+        want.update({k: f"v1 {k}" for k in keys[15:]})
+        got = {r.key: r.pretty_name for r in log.read_version(2).nodes.collect()}
+        assert got == want
+
+    def test_conf_bytes_reads_sizes_as_spark_does(self, spark):
+        from biodiversity_graph_db_spark.operators._util import conf_bytes
+
+        key = "spark.graft.test.bytes"
+        try:
+            for raw, want in (
+                ("64m", 64 << 20), ("10MB", 10 << 20), ("10485760", 10485760),
+                ("9223372036854775807b", (1 << 63) - 1), ("-1", -1), ("2g", 2 << 30),
+            ):
+                spark.conf.set(key, raw)
+                assert conf_bytes(spark, key) == want, raw
+        finally:
+            spark.conf.unset(key)
+        assert conf_bytes(spark, "spark.sql.autoBroadcastJoinThreshold") == 64 << 20
+
+    def test_reliable_mode_reaches_commit_and_head_cuts(self, spark, tmp_path):
+        """With ``spark.graft.cuts.reliable=true`` the commit's two cuts
+        and a reopened log's head cuts are reliable checkpoints: each
+        writes its RDD under the SparkContext checkpoint dir."""
+        import os
+
+        from biodiversity_graph_db_spark.graph.store import GraphStore
+        from biodiversity_graph_db_spark.graph.versioned import (
+            VersionedGraphLog,
+            open_log,
+        )
+
+        jsc = spark.sparkContext._jsc.sc()
+
+        def rdd_dirs() -> set[str]:
+            root = jsc.getCheckpointDir().get().removeprefix("file:")
+            if not os.path.isdir(root):
+                return set()
+            return {d for d in os.listdir(root) if d.startswith("rdd-")}
+
+        keys = [f"taxonnode_{i:03d}" for i in range(6)]
+        spark.conf.set("spark.graft.cuts.reliable", "true")
+        spark.conf.set("spark.graft.cuts.dir", str(tmp_path / "cuts"))
+        try:
+            # the batch cut is reliable too, and sets the checkpoint dir
+            g = GraphStore.empty(spark).add_nodes(self._nodes(spark, keys, "v1"))
+            before = rdd_dirs()
+            log = VersionedGraphLog(spark, str(tmp_path / "log"))
+            assert log.commit(g) == 1
+            after_commit = rdd_dirs()
+            assert len(after_commit - before) >= 2
+            head = open_log(spark, log.path).head_store()
+            assert len(rdd_dirs() - after_commit) >= 2
+            assert sorted(r.key for r in head.nodes.collect()) == keys
+        finally:
+            spark.conf.set("spark.graft.cuts.reliable", "false")
+            spark.conf.unset("spark.graft.cuts.dir")
