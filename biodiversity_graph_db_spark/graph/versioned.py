@@ -14,13 +14,13 @@ Scale shape per commit: the committed store is cut once per table by
 ``_util.measured_cut``, so the next head carries MEASURED statistics and
 a partition count derived from its bytes (one per advisory partition
 size).  The delta compares an ``xxhash64`` over the payload columns per
-storage key: two broadcast anti-joins (changed rows, removed keys) with
-no Exchange while both snapshots fit the broadcast threshold, else ONE
-full-outer join per table — the exact SD1 diff plan (zero-Exchange on
-bucketed stores).  Log volume is ∝ change volume, never corpus size,
-and reads prune version partitions at the directory level.  This is the
-plain-parquet core of what Delta Lake wraps in transactional metadata
-(see the concurrent-writer contract, SCALE.md).
+storage key in two anti-joins per table (changed rows, removed keys):
+broadcast joins with no Exchange while the snapshots fit the broadcast
+threshold, as measured cuts of a small store do.  Log volume is ∝
+change volume, never corpus size, and reads prune version partitions at
+the directory level.  This is the plain-parquet core of what Delta Lake
+wraps in transactional metadata (see the concurrent-writer contract,
+SCALE.md).
 """
 
 from __future__ import annotations
@@ -35,11 +35,7 @@ from biodiversity_graph_db_spark.graph.schema import (
     NODES_SCHEMA,
 )
 from biodiversity_graph_db_spark.graph.store import GraphStore
-from biodiversity_graph_db_spark.operators._util import (
-    conf_bytes,
-    measured_cut,
-    plan_bytes,
-)
+from biodiversity_graph_db_spark.operators._util import measured_cut
 from biodiversity_graph_db_spark.operators.snapshot import read_as_of
 
 #: edge identity — the same 4-tuple ``add_relations`` dedups on
@@ -69,9 +65,7 @@ def table_delta(
     cols only) for removed keys — exactly what ``save_version`` appends.
     Payload comparison is one map-side ``xxhash64`` over the non-key
     columns, so a join moves (key, hash), not wide payloads (the SD1
-    shape).  When both snapshots fit the broadcast threshold (measured
-    commit cuts do), the delta is two broadcast anti-joins and shuffles
-    nothing; otherwise one full-outer join."""
+    shape)."""
     val_cols = [c for c in old.columns if c not in key_cols]
     types = dict(old.dtypes)
     # NULL-SAFE key equality: edge identity includes the nullable
@@ -91,22 +85,11 @@ def table_delta(
     for k in key_cols:
         c = o[f"_ok_{k}"].eqNullSafe(n[f"_nk_{k}"])
         cond = c if cond is None else cond & c
-    threshold = conf_bytes(old.sparkSession, "spark.sql.autoBroadcastJoinThreshold")
-    if plan_bytes(old) <= threshold and plan_bytes(new) <= threshold:
-        # both snapshots fit a broadcast (measured commit cuts): two
-        # map-side anti-joins, no shuffle.  Same rows as the full-outer
-        # form below while each snapshot's keys are unique (the store's
-        # invariant).
-        changed = n.join(o, cond & (o["_oh"] == n["_nh"]), "left_anti")
-        gone = o.join(n, cond, "left_anti")
-    else:
-        j = o.join(n, cond, "full_outer")
-        # xxhash64 never returns NULL, so a NULL hash marks side absence
-        changed = j.where(
-            F.col("_nh").isNotNull()
-            & (F.col("_oh").isNull() | (F.col("_oh") != F.col("_nh")))
-        )
-        gone = j.where(F.col("_nh").isNull())
+    # two anti-joins: new rows with no same-key, same-hash old row, and
+    # old keys absent from new (broadcast while the snapshots fit the
+    # broadcast threshold — measured commit cuts do — so no shuffle)
+    changed = n.join(o, cond & (o["_oh"] == n["_nh"]), "left_anti")
+    gone = o.join(n, cond, "left_anti")
     upserts = changed.select(
         *[F.col(f"_nk_{k}").alias(k) for k in key_cols],
         *val_cols,

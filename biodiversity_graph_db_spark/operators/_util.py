@@ -16,8 +16,6 @@ would widen the accumulator to DECIMAL(38,0) — same shape, wider type.
 
 from __future__ import annotations
 
-import re
-
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
@@ -190,17 +188,10 @@ def plan_bytes(df) -> int:
     return df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
 
 
-_BYTE_UNITS = {"": 1, "k": 1 << 10, "m": 1 << 20, "g": 1 << 30, "t": 1 << 40, "p": 1 << 50}
-
-
-def conf_bytes(spark, key: str) -> int:
-    """A byte-size SQL conf ("64m", "10MB", "9223372036854775807b", "-1")
-    in bytes, read the way Spark reads it: binary units, no unit means
-    bytes, negative stays negative (a disabled threshold)."""
-    m = re.fullmatch(r"\s*(-?\d+)\s*([kmgtp]?)b?\s*", spark.conf.get(key), re.IGNORECASE)
-    if m is None:
-        raise ValueError(f"{key} is not a byte size: {spark.conf.get(key)!r}")
-    return int(m.group(1)) * _BYTE_UNITS[m.group(2).lower()]
+def _sql_conf(spark):
+    """The session's JVM ``SQLConf``: its typed getters return sizes
+    already parsed the way the planner reads them."""
+    return spark._jsparkSession.sessionState().conf()
 
 
 def unsized(df) -> bool:
@@ -210,7 +201,7 @@ def unsized(df) -> bool:
     ``spark.sql.defaultSizeInBytes`` (8 EiB), and so does every union
     or checkpoint over it — every join it feeds then plans as a
     sort-merge join."""
-    return plan_bytes(df) >= conf_bytes(df.sparkSession, "spark.sql.defaultSizeInBytes")
+    return plan_bytes(df) >= _sql_conf(df.sparkSession).defaultSizeInBytes()
 
 
 def measured_cut(df):
@@ -243,6 +234,9 @@ def measured_cut(df):
     finally:
         if owned:
             df.unpersist()
-    target = conf_bytes(out.sparkSession, "spark.sql.adaptive.advisoryPartitionSizeInBytes")
+    spark = out.sparkSession
+    target = _sql_conf(spark).getConf(
+        spark._jvm.org.apache.spark.sql.internal.SQLConf.ADVISORY_PARTITION_SIZE_IN_BYTES()
+    )
     n = max(1, -(-plan_bytes(out) // target))
     return out.coalesce(n) if n < out.rdd.getNumPartitions() else out

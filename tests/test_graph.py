@@ -554,11 +554,10 @@ class TestWritePathMaterialization:
         assert left, "the commit cuts should be persisted"
         assert [r.toDebugString() for r in left if not r.isCheckpointed()] == []
 
-    def test_delta_forms_agree(self, spark):
-        """``table_delta`` plans two broadcast anti-joins when both
-        snapshots fit the broadcast threshold and one full-outer join
-        otherwise (forced here by disabling broadcasts); both append the
-        same rows, null-payload edge keys included."""
+    def test_delta_of_measured_cuts(self, spark):
+        """``table_delta`` of two measured cuts plans broadcast anti-joins
+        (no shuffle Exchange) and appends exactly the changed rows and
+        the removed keys' tombstones, null-payload edge keys included."""
         from biodiversity_graph_db_spark.graph.versioned import (
             EDGE_KEY,
             table_delta,
@@ -573,21 +572,11 @@ class TestWritePathMaterialization:
             [("a", "b", "IsA", None, 1), ("a", "c", "IsA", None, 2),
              ("b", "c", "IsA", "x", 1), ("d", "e", "IsA", None, 1)], schema))
 
-        def delta():
-            df = table_delta(old, new, list(EDGE_KEY))
-            plan = df._jdf.queryExecution().executedPlan().toString()
-            return "FullOuter" in plan, sorted(map(tuple, df.collect()), key=repr)
-
-        key = "spark.sql.autoBroadcastJoinThreshold"
-        threshold = spark.conf.get(key)
-        anti = delta()
-        spark.conf.set(key, "-1")
-        try:
-            outer = delta()
-        finally:
-            spark.conf.set(key, threshold)
-        assert (anti[0], outer[0]) == (False, True)
-        assert anti[1] == outer[1] == sorted([
+        df = table_delta(old, new, list(EDGE_KEY))
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        assert "BroadcastHashJoin" in plan and "LeftAnti" in plan
+        assert "Exchange" not in plan.replace("BroadcastExchange", "")
+        assert sorted(map(tuple, df.collect()), key=repr) == sorted([
             ("a", "c", "IsA", None, 2, False),
             ("d", "e", "IsA", None, 1, False),
             ("c", "d", "IsA", "y", None, True),

@@ -2012,21 +2012,6 @@ class TestWritePathPlans:
         got = {r.key: r.pretty_name for r in log.read_version(2).nodes.collect()}
         assert got == want
 
-    def test_conf_bytes_reads_sizes_as_spark_does(self, spark):
-        from biodiversity_graph_db_spark.operators._util import conf_bytes
-
-        key = "spark.graft.test.bytes"
-        try:
-            for raw, want in (
-                ("64m", 64 << 20), ("10MB", 10 << 20), ("10485760", 10485760),
-                ("9223372036854775807b", (1 << 63) - 1), ("-1", -1), ("2g", 2 << 30),
-            ):
-                spark.conf.set(key, raw)
-                assert conf_bytes(spark, key) == want, raw
-        finally:
-            spark.conf.unset(key)
-        assert conf_bytes(spark, "spark.sql.autoBroadcastJoinThreshold") == 64 << 20
-
     def test_reliable_mode_reaches_commit_and_head_cuts(self, spark, tmp_path):
         """With ``spark.graft.cuts.reliable=true`` the commit's two cuts
         and a reopened log's head cuts are reliable checkpoints: each
