@@ -51,7 +51,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from biodiversity_graph_db_spark.extensions.textstats import tokens
-from biodiversity_graph_db_spark.operators._util import spread
+from biodiversity_graph_db_spark.operators._util import cut, spread
 from biodiversity_graph_db_spark.registry import query
 from biodiversity_graph_db_spark.tables import table
 
@@ -134,10 +134,10 @@ def bpe_train(
 ) -> DataFrame:
     """Train ``n_steps`` BPE merges; returns the merge table
     (step, left_sym, right_sym, merged, pair_count)."""
-    corpus = _word_types(spark, sf_dir).localCheckpoint()
+    corpus = cut(_word_types(spark, sf_dir))
     steps: list[DataFrame] = []
     for k in range(1, n_steps + 1):
-        top = _top_pair(corpus).localCheckpoint()  # 1 row, eager
+        top = cut(_top_pair(corpus))  # 1 row, eager
         steps.append(
             top.select(
                 F.lit(k).cast("long").alias("step"),

@@ -1554,7 +1554,6 @@ def d15_lsh_band_store(spark: SparkSession, sf_dir: str) -> DataFrame:
     is the per-batch-directory transaction (streaming/ingest.py
     ``lsh_band_upsert``); the store stays partitioned by ``band`` so
     ingest-time dup checks prune buckets exactly like the batch path."""
-    import shutil
     import tempfile
 
     from biodiversity_graph_db_spark.streaming.ingest import (
@@ -1569,8 +1568,9 @@ def d15_lsh_band_store(spark: SparkSession, sf_dir: str) -> DataFrame:
         .where(F.col("doc_id") < 200)
         .select("doc_id", "text")
     )
-    tmp = tempfile.mkdtemp(prefix="d15_lsh_store_")
-    try:
+    with tempfile.TemporaryDirectory(
+        prefix="d15_lsh_store_", ignore_cleanup_errors=True
+    ) as tmp:
         drain_parquet_batches(
             docs,
             "doc_id",
@@ -1585,10 +1585,8 @@ def d15_lsh_band_store(spark: SparkSession, sf_dir: str) -> DataFrame:
             read_lsh_bands(spark, f"{tmp}/store")
             .select("doc_id", F.col("band").cast("long").alias("band"), "band_key")
             .orderBy("doc_id", "band")
-            .localCheckpoint()  # materialize before the store dir dies
+            .transform(cut)
         )
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
 
 
 @query(

@@ -22,7 +22,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from biodiversity_graph_db_spark.operators._util import dquant, sql_dquant
+from biodiversity_graph_db_spark.operators._util import cut, dquant, sql_dquant
 from biodiversity_graph_db_spark.registry import query
 from biodiversity_graph_db_spark.tables import table
 
@@ -286,7 +286,7 @@ def pr3_psi_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     s = (
         d.groupBy("source", "bucket")
         .agg(F.count("*").alias("sc"))
-        .localCheckpoint()
+        .transform(cut)
     )
     g = s.groupBy("bucket").agg(F.sum("sc").alias("gc"))
     gn = g.agg(F.sum("gc").alias("gt"))

@@ -19,7 +19,12 @@ from collections.abc import Callable
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from biodiversity_graph_db_spark.operators._util import dquant, spread, sql_dquant
+from biodiversity_graph_db_spark.operators._util import (
+    cut,
+    dquant,
+    spread,
+    sql_dquant,
+)
 from biodiversity_graph_db_spark.registry import query
 from biodiversity_graph_db_spark.tables import table
 
@@ -821,7 +826,7 @@ def ivf_topk_indexed(
             F.col("norm_sq").alias("q_norm"),
             "cent_id",
         )
-        .localCheckpoint()
+        .transform(cut)
     )
     probed = sorted(
         {r.cent_id for r in q_assigned.select("cent_id").distinct().collect()}
@@ -1438,7 +1443,7 @@ def mmr_rerank(
     cand = (
         scored.withColumn("crk", F.row_number().over(w))
         .where(F.col("crk") <= pool)
-        .localCheckpoint()
+        .transform(cut)
     )
     a = cand.select(
         "q_id",
@@ -1463,7 +1468,7 @@ def mmr_rerank(
                 F.col("a_emb"), F.col("b_emb"), F.col("a_norm"), F.col("b_norm")
             ).alias("sim"),
         )
-        .localCheckpoint()
+        .transform(cut)
     )
     lamc, penc = F.lit(lam), F.lit(pen)
     selected = cand.where(F.col("crk") == 1).select(
@@ -1508,7 +1513,7 @@ def mmr_rerank(
                 F.col("top.s").alias("score"),
             )
         )
-        selected = selected.unionByName(pick).localCheckpoint()
+        selected = cut(selected.unionByName(pick))
     return selected.select(
         "q_id", "rank", "c_id", dquant("score").alias("mmr_q")
     )
@@ -1685,7 +1690,7 @@ def compact_ivf_deltas(spark: SparkSession, path: str) -> None:
     finish_ivf_compaction(spark, path)  # complete any stranded swap first
     if not fs.exists(hpath(f"{path}/assigned_delta")):
         return
-    merged = _read_assigned(spark, path).localCheckpoint()
+    merged = cut(_read_assigned(spark, path))
     tmp = f"{path}/assigned__compact_tmp"
     merged.write.mode("overwrite").partitionBy("cent_id").parquet(tmp)
     finish_ivf_compaction(spark, path)
@@ -1846,14 +1851,14 @@ def d10_semdedup_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     import math
 
     emb = table(spark, sf_dir, "embeddings")
-    sl = emb.where(F.col("vec_id") < 200).localCheckpoint()
+    sl = cut(emb.where(F.col("vec_id") < 200))
     n = sl.count()
     k = max(8, math.ceil(4 * math.sqrt(n / 2.0)))
     cent_ids, cmat, cnorm = _collect_centroids(sl, k)
     a = (
         ivf_assign(sl, cent_ids, cmat, cnorm, n_probe=4)
         .select("vec_id", "cent_id")
-        .localCheckpoint()
+        .transform(cut)
     )
     cand = (
         a.alias("l")
@@ -1863,7 +1868,7 @@ def d10_semdedup_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("l.vec_id").alias("va"), F.col("r.vec_id").alias("vb")
         )
         .dropDuplicates()
-        .localCheckpoint()
+        .transform(cut)
     )
     nn = with_norm(sl).select("vec_id", "embedding", "norm_sq")
     truth = (
@@ -1884,7 +1889,7 @@ def d10_semdedup_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             F.col("a.vec_id").alias("va"), F.col("b.vec_id").alias("vb")
         )
-        .localCheckpoint()
+        .transform(cut)
     )
     hits = cand.join(truth, ["va", "vb"])
     nc = cand.agg(F.count("*").alias("n_candidates"))
@@ -1925,12 +1930,12 @@ def v10_filtered_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
     story at partial probing is V5's measured number, unchanged by
     filtering (assignment ignores metadata)."""
     import math
-    import shutil
     import tempfile
 
     emb = table(spark, sf_dir, "embeddings")
-    tmp = tempfile.mkdtemp(prefix="v10_idx_")
-    try:
+    with tempfile.TemporaryDirectory(
+        prefix="v10_idx_", ignore_cleanup_errors=True
+    ) as tmp:
         write_ivf_index(
             emb.select("vec_id", "embedding", "label"), f"{tmp}/idx"
         )
@@ -1943,10 +1948,7 @@ def v10_filtered_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
             k=5,
             filter_expr=F.col("label") % 2 == 0,
         ).orderBy("q_id", "rank")
-        out = out.localCheckpoint()  # materialize before the index dir dies
-        return out
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
+        return cut(out)
 
 @query(
     "V11_filtered_recall",
@@ -2031,14 +2033,14 @@ def v11_filtered_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     label predicate evaluated inside the probed partitions.  The
     oracle recomputes BOTH rankings in SQL, so the recall number
     itself is cross-engine verified."""
-    import shutil
     import tempfile
 
     from biodiversity_graph_db_spark.operators._util import dquant
 
     emb = table(spark, sf_dir, "embeddings")
-    tmp = tempfile.mkdtemp(prefix="v11_idx_")
-    try:
+    with tempfile.TemporaryDirectory(
+        prefix="v11_idx_", ignore_cleanup_errors=True
+    ) as tmp:
         write_ivf_index(
             emb.select("vec_id", "embedding", "label"),
             f"{tmp}/idx",
@@ -2054,7 +2056,7 @@ def v11_filtered_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
             filter_expr=F.col("label") % 2 == 0,
         ).select("q_id", "c_id", F.lit(1).alias("hit"))
         exact = v9_filtered_topk(spark, sf_dir).select("q_id", "c_id")
-        out = (
+        return (
             exact.join(approx, ["q_id", "c_id"], "left")
             .groupBy("q_id")
             .agg(
@@ -2066,10 +2068,8 @@ def v11_filtered_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
                 ).alias("recall_at_5"),
             )
             .orderBy("q_id")
-        ).localCheckpoint()  # materialize before the index dir dies
-        return out
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
+            .transform(cut)
+        )
 
 
 # --- V12: product-quantization ADC top-k -----------------------------------
@@ -2313,7 +2313,7 @@ def pq_adc_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     one query, the round-8 plan-sweep class; plan-tested down to
     one)."""
     emb = table(spark, sf_dir, "embeddings")
-    cb = pq_codebook(emb).localCheckpoint()
+    cb = cut(pq_codebook(emb))
     codes = pq_encode(spread(emb), cb)
     lut = pq_query_lut(emb.where(F.col("vec_id") < 10), cb)
     scores = (
@@ -2383,7 +2383,7 @@ def pq_query_lut(queries_df: DataFrame, cb: DataFrame) -> DataFrame:
             ).alias("pdot"),
         )
         .join(F.broadcast(qnorm), "q_id")
-        .localCheckpoint()
+        .transform(cut)
     )
     return lut
 
@@ -2683,7 +2683,7 @@ def v15_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     cand = cass.join(qass, "cent_id").where(
         F.col("q_id") != F.col("c_id")
     ).select("q_id", "c_id")
-    cb = pq_codebook(emb).localCheckpoint()
+    cb = cut(pq_codebook(emb))
     codes = pq_encode(spread(emb), cb)
     lut = pq_query_lut(emb.where(F.col("vec_id") < 10), cb)
     scores = (
@@ -2838,7 +2838,7 @@ def ivfpq_topk_indexed(
     qass = F.broadcast(
         ivf_assign(queries_df, cent_ids, cmat, cnorm, n_probe)
         .select(F.col("vec_id").alias("q_id"), "cent_id")
-        .localCheckpoint()
+        .transform(cut)
     )
     probed = sorted(
         {r.cent_id for r in qass.select("cent_id").distinct().collect()}
@@ -2940,12 +2940,12 @@ def v16_ivfpq_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
     partition file pruning on a codes-only scan, raw vectors never
     read — is pinned by the plan test; the staleness guard after
     append is pinned by test_extensions."""
-    import shutil
     import tempfile
 
     emb = table(spark, sf_dir, "embeddings")
-    tmp = tempfile.mkdtemp(prefix="ivfpq_idx_")
-    try:
+    with tempfile.TemporaryDirectory(
+        prefix="ivfpq_idx_", ignore_cleanup_errors=True
+    ) as tmp:
         write_ivf_index(
             emb.select("vec_id", "embedding"), f"{tmp}/idx", n_centroids=8,
             n_probe=1,
@@ -2960,10 +2960,8 @@ def v16_ivfpq_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
                 k=5,
             )
             .orderBy("q_id", "rank")
-            .localCheckpoint()  # materialize before the index dir dies
+            .transform(cut)
         )
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
 
 
 # --- V17: Lloyd k-means refinement of the IVF centroids ---------------------
@@ -3025,7 +3023,7 @@ def km_quantize(emb: DataFrame) -> DataFrame:
             (F.col("dim") + 1).alias("dim"),
             F.floor(F.col("v").cast("double") * 1e6).cast("long").alias("vq"),
         )
-        .localCheckpoint()
+        .transform(cut)
     )
 
 
@@ -3070,7 +3068,7 @@ def km_assign(evq: DataFrame, cents_df: DataFrame) -> DataFrame:
             F.col("s.cent_id").alias("cent_id"),
             F.col("s.ssev").alias("ssev"),
         )
-        .localCheckpoint()
+        .transform(cut)
     )
 
 
@@ -3259,7 +3257,7 @@ def v18_cluster_purity(spark: SparkSession, sf_dir: str) -> DataFrame:
         assigned.join(emb.select("vec_id", "label"), "vec_id")
         .groupBy("cent_id", "label")
         .agg(F.count(F.lit(1)).cast("long").alias("n"))
-        .localCheckpoint()  # k×|labels| bounded; feeds totals + top-1
+        .transform(cut)  # k×|labels| bounded; feeds totals + top-1
     )
     tot = cl.groupBy("cent_id").agg(
         F.sum("n").cast("long").alias("n_vecs"),
@@ -3768,7 +3766,7 @@ def pq_train_codebook(corpus: DataFrame, iters: int = _PQKM_ITERS) -> DataFrame:
     agree).  Returns the pq_codebook schema (m, j, cvec, cnorm), so
     pq_encode / pq_query_lut consume it through the same injection
     seam as the hash-rank default."""
-    corpus = corpus.localCheckpoint()  # feeds iters+1 assignment passes
+    corpus = cut(corpus)  # feeds iters+1 assignment passes
     # the per-element quantized grid the UPDATE step averages over —
     # built once; the assignment step is pq_encode ITSELF (training
     # runs the exact serve-path kernel, so train/serve can never
@@ -3788,7 +3786,7 @@ def pq_train_codebook(corpus: DataFrame, iters: int = _PQKM_ITERS) -> DataFrame:
             .cast("long")
             .alias("xi"),
         )
-        .localCheckpoint()
+        .transform(cut)
     )
 
     def to_arrays(cb_long: DataFrame) -> DataFrame:
@@ -3823,7 +3821,7 @@ def pq_train_codebook(corpus: DataFrame, iters: int = _PQKM_ITERS) -> DataFrame:
             F.broadcast(seeds),
             F.col("c_id") == F.col("vec_id"),
         ).select("m", "j", "d", F.col("xi").alias("cq"))
-    ).localCheckpoint()
+    ).transform(cut)
     for _ in range(iters):
         assign = pq_encode(corpus, cb).select("c_id", "m", "j")
         cb = to_arrays(
@@ -3834,7 +3832,7 @@ def pq_train_codebook(corpus: DataFrame, iters: int = _PQKM_ITERS) -> DataFrame:
                 .cast("long")
                 .alias("cq")
             )
-        ).localCheckpoint()
+        ).transform(cut)
     return cb
 
 
@@ -4076,9 +4074,9 @@ def v21_pq_trained_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     job-count, not data — the same localCheckpoint-chain class as
     V15/V17, measured flat per decade in SCALE §27."""
     emb = table(spark, sf_dir, "embeddings")
-    corp = clustered_embeddings(emb).localCheckpoint()
+    corp = cut(clustered_embeddings(emb))
     queries = corp.where(F.col("vec_id") < 10)
-    cb_hash = pq_codebook(corp).localCheckpoint()
+    cb_hash = cut(pq_codebook(corp))
     cb_tr = pq_train_codebook(corp)
     exact = brute_force_topk(queries, corp, k=5).select("q_id", "c_id")
     h_top = _adc_topk(corp, queries, cb_hash).withColumn("h_hit", F.lit(1))

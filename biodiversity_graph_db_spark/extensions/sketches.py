@@ -44,6 +44,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from biodiversity_graph_db_spark.operators._util import cut
 from biodiversity_graph_db_spark.registry import query
 from biodiversity_graph_db_spark.tables import table
 
@@ -247,7 +248,7 @@ def t22_countmin_heavy(spark: SparkSession, sf_dir: str) -> DataFrame:
     scan); estimation touches only the queried items × depth cells —
     at 100 TB the sketch rides a dashboard, the corpus stays cold."""
     ev = table(spark, sf_dir, "events")
-    counters = cm_counters(ev, "user_id").localCheckpoint()
+    counters = cut(cm_counters(ev, "user_id"))
     top = (
         ev.groupBy("user_id")
         .agg(F.count(F.lit(1)).alias("true_n"))
@@ -771,7 +772,6 @@ def t42_cm_store(spark: SparkSession, sf_dir: str) -> DataFrame:
     one micro-batch merged into a store that stays depth x width rows
     forever; the replay stamp is lineage-bound (a new stream restarting
     at batch 0 merges; a same-lineage replay skips)."""
-    import shutil
     import tempfile
 
     from biodiversity_graph_db_spark.streaming.ingest import (
@@ -780,8 +780,9 @@ def t42_cm_store(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     ev = table(spark, sf_dir, "events").select("event_id", "user_id")
-    tmp = tempfile.mkdtemp(prefix="t42_cm_store_")
-    try:
+    with tempfile.TemporaryDirectory(
+        prefix="t42_cm_store_", ignore_cleanup_errors=True
+    ) as tmp:
         drain_parquet_batches(
             ev,
             "event_id",
@@ -796,10 +797,8 @@ def t42_cm_store(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.col("cnt").cast("long").alias("cnt"),
             )
             .orderBy("j", "pos")
-            .localCheckpoint()  # materialize before the store dir dies
+            .transform(cut)
         )
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
 
 
 @query(
@@ -833,7 +832,6 @@ def t44_kmv_store(spark: SparkSession, sf_dir: str) -> DataFrame:
     naturally idempotent (distinct union), so unlike CM/rollup it
     needs no replay stamp — a replayed batch unions in rows that are
     already there."""
-    import shutil
     import tempfile
 
     from biodiversity_graph_db_spark.streaming.ingest import (
@@ -844,8 +842,9 @@ def t44_kmv_store(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = table(spark, sf_dir, "events").select(
         "event_id", "event_type", "user_id"
     )
-    tmp = tempfile.mkdtemp(prefix="t44_kmv_store_")
-    try:
+    with tempfile.TemporaryDirectory(
+        prefix="t44_kmv_store_", ignore_cleanup_errors=True
+    ) as tmp:
         drain_parquet_batches(
             ev,
             "event_id",
@@ -856,7 +855,5 @@ def t44_kmv_store(spark: SparkSession, sf_dir: str) -> DataFrame:
             spark.read.parquet(f"{tmp}/store")
             .select("event_type", F.col("h").cast("long").alias("h"))
             .orderBy("event_type", "h")
-            .localCheckpoint()  # materialize before the store dir dies
+            .transform(cut)
         )
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)

@@ -1988,7 +1988,7 @@ def lm_perplexity(docs: DataFrame) -> DataFrame:
         bigram_stream(chars)
         .groupBy("bg")
         .agg(F.count(F.lit(1)).cast("long").alias("cbg"))
-        .localCheckpoint()  # alphabet-bounded; feeds 3 rollups
+        .transform(cut)  # alphabet-bounded; feeds 3 rollups
     )
     pre = lm.groupBy(F.substring("bg", 1, 1).alias("c1")).agg(
         F.sum("cbg").cast("long").alias("cpre")
@@ -2764,7 +2764,7 @@ def t36_pmi_collocations(spark: SparkSession, sf_dir: str) -> DataFrame:
         .where(F.col("w1") != "")
         .groupBy("w1", "w2")
         .agg(F.count(F.lit(1)).alias("c"))
-        .localCheckpoint()
+        .transform(cut)
     )
     u = p.groupBy(F.col("w1").alias("w")).agg(
         F.sum("c").cast("long").alias("cu")
@@ -2839,13 +2839,13 @@ def _nb_scored(spark: SparkSession, sf_dir: str) -> DataFrame:
         dw.where("is_train")
         .groupBy(F.col("w"), F.col("lang").alias("c"))
         .agg(F.sum("m").cast("long").alias("cnt"))
-        .localCheckpoint()  # vocab×classes bounded; feeds 3 consumers
+        .transform(cut)  # vocab×classes bounded; feeds 3 consumers
     )
     prior = (
         d.where(F.col("doc_id") % 2 == 0)
         .groupBy(F.col("lang").alias("c"))
         .agg(F.count(F.lit(1)).cast("long").alias("n_docs"))
-        .localCheckpoint()  # |classes| rows; feeds the grid AND n_train
+        .transform(cut)  # |classes| rows; feeds the grid AND n_train
     )
     # class list from the PRIOR, not the token counts: a train class
     # whose documents are all token-less still exists, with tot=0 and
@@ -3233,7 +3233,7 @@ def t45_confidence_route(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count(F.lit(1)).cast("long").alias("n"),
             F.sum("ok").cast("long").alias("c"),
         )
-        .localCheckpoint()  # <=10 rows; feeds tot AND suffix
+        .transform(cut)  # <=10 rows; feeds tot AND suffix
     )
     tot = F.broadcast(
         bands.agg(
@@ -3374,7 +3374,7 @@ def t38_dsir_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("cnt_t"),
             F.sum("m").cast("long").alias("cnt_r"),
         )
-        .localCheckpoint()  # vocab-bounded; feeds totals + scoring
+        .transform(cut)  # vocab-bounded; feeds totals + scoring
     )
     tots = model.agg(
         F.sum("cnt_t").cast("long").alias("tt"),
@@ -3518,9 +3518,8 @@ def t41_nb_model_store(spark: SparkSession, sf_dir: str) -> DataFrame:
     batch (one (doc,word) shuffle, vocab×classes-bounded state) plus a
     grouped-sum fold into a store that stays vocab×classes rows no
     matter how much history streamed through — the 100 TB online-
-    classifier maintenance story.  The result is localCheckpoint-ed
-    before the temp store dies (the V10 index-teardown discipline)."""
-    import shutil
+    classifier maintenance story.  The result is cut before the temp
+    store dies (the V10 index-teardown discipline)."""
     import tempfile
 
     from biodiversity_graph_db_spark.streaming.ingest import (
@@ -3529,8 +3528,9 @@ def t41_nb_model_store(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     docs = table(spark, sf_dir, "documents")
-    tmp = tempfile.mkdtemp(prefix="t41_nb_store_")
-    try:
+    with tempfile.TemporaryDirectory(
+        prefix="t41_nb_store_", ignore_cleanup_errors=True
+    ) as tmp:
         drain_parquet_batches(
             docs,
             "doc_id",
@@ -3546,10 +3546,8 @@ def t41_nb_model_store(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             .select("w", "c", "cnt", "class_docs")
             .orderBy("w", "c")
-            .localCheckpoint()  # materialize before the store dir dies
+            .transform(cut)
         )
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
 
 
 # --- T40: Heaps'-law vocabulary growth curve --------------------------------

@@ -27,6 +27,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from biodiversity_graph_db_spark.operators._util import (
+    cut,
+    partition_scope,
+    shuffle_ceiling,
+)
+
 RANK_UNIT = 1_000_000  # PageRank fixed-point micro-units
 
 
@@ -35,41 +41,10 @@ def _derived_partitions(df: DataFrame, rows_per_partition: int = 50_000) -> int:
     session's shuffle parallelism — the loop-partitioning rule pagerank
     documented (tiny graphs must not fan out to the session default;
     100 TB graphs saturate the ceiling).  Counting materializes the
-    caller's cache, which every iterative caller wants anyway."""
-    spark = df.sparkSession
-    try:
-        ceiling = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    except (TypeError, ValueError):
-        ceiling = spark.sparkContext.defaultParallelism
+    caller's cache, which every iterative caller wants anyway.  The
+    loop then runs inside ``partition_scope`` at this count."""
+    ceiling = shuffle_ceiling(df.sparkSession)
     return max(1, min(ceiling, df.count() // rows_per_partition + 1))
-
-
-class _shuffle_scope:
-    """Scope ``spark.sql.shuffle.partitions`` to an iterative loop's
-    derived partition count (restored on exit, exception-safe).
-
-    Guide §2.4: the loop's cached sides are hash-partitioned on the
-    join key at the DERIVED count, but every per-iteration
-    groupBy/join otherwise plans its Exchange at the SESSION count —
-    EnsureRequirements then re-shuffles the cached side (or the
-    aggregation output) every round to reconcile the two.  Planning
-    the whole loop at one count makes the aggregation Exchange land
-    directly on the cached sides' partitioning, so each iteration runs
-    exactly ONE Exchange (the inherent message shuffle).  Callers must
-    MATERIALIZE (localCheckpoint/count) inside the scope — the conf is
-    read at plan time, i.e. at the first action.  Serial-harness
-    assumption as _drain_conf: a concurrently planned query in the
-    same session would pick up the scoped value."""
-
-    def __init__(self, spark, n: int):
-        self.spark, self.n = spark, n
-
-    def __enter__(self):
-        self.old = self.spark.conf.get("spark.sql.shuffle.partitions")
-        self.spark.conf.set("spark.sql.shuffle.partitions", str(self.n))
-
-    def __exit__(self, *exc):
-        self.spark.conf.set("spark.sql.shuffle.partitions", self.old)
 
 
 def _pairs(edges: DataFrame) -> DataFrame:
@@ -129,13 +104,13 @@ def pagerank(
     if partitions is None:
         partitions = _derived_partitions(e)
     # plan AND execute the whole loop at the derived count
-    # (_shuffle_scope): the per-iteration contrib aggregation then
+    # (partition_scope): the per-iteration contrib aggregation then
     # shuffles straight onto nodes'/out's partitioning — one Exchange
     # per iteration instead of three (the contrib groupBy at the
     # session count forced EnsureRequirements to re-shuffle the cached
     # nodes side in every nodes⋈contrib AND the ranks side of the next
     # round's out⋈ranks; r12 before-plan: 3 Exchanges per round).
-    with _shuffle_scope(e.sparkSession, partitions):
+    with partition_scope(e.sparkSession, partitions):
         e = e.repartition(partitions, "src")
         nodes = (
             e.select(F.col("src").alias("key"))
@@ -189,11 +164,11 @@ def pagerank(
                 and i % checkpoint_every == checkpoint_every - 1
                 and i < iterations - 1
             ):
-                ranks = ranks.localCheckpoint()
+                ranks = cut(ranks)
         # materialize INSIDE the scope — the conf is read at plan time,
         # so a lazy return would hand the caller's action the restored
         # session count and re-introduce the reconciliation Exchanges
-        return ranks.localCheckpoint()
+        return cut(ranks)
 
 
 def triangle_count(edges: DataFrame) -> DataFrame:
@@ -233,11 +208,11 @@ def shortest_paths(
     """
     spark = edges.sparkSession
     e = _pairs(edges).cache()
-    # loop-scoped partitioning (r13, see _shuffle_scope) + the edge
+    # loop-scoped partitioning (r13, see partition_scope) + the edge
     # relation pre-hashed on the frontier join key, so each hop's
     # expansion reuses the cached Exchange
     partitions = _derived_partitions(e)
-    with _shuffle_scope(spark, partitions):
+    with partition_scope(spark, partitions):
         e = e.repartition(partitions, "src").cache()
         visited = spark.createDataFrame(
             [(lm, lm, 0) for lm in landmarks],
@@ -263,7 +238,7 @@ def shortest_paths(
             )
             if nxt.isEmpty():
                 break
-            visited = visited.unionByName(nxt).localCheckpoint()
+            visited = cut(visited.unionByName(nxt))
             frontier = nxt
     return visited
 
@@ -285,12 +260,12 @@ def label_propagation(edges: DataFrame, max_iter: int = 5) -> DataFrame:
     eager per-round ``localCheckpoint`` IS the optimum here: 5 tiny
     actions, linear plans, ~2.0 s."""
     und = undirect(edges).cache()
-    # loop-scoped partitioning (r13, see _shuffle_scope): LPA's rounds
+    # loop-scoped partitioning (r13, see partition_scope): LPA's rounds
     # are eager (per-round localCheckpoint), so every vote/argmax/carry
     # shuffle planned inside the scope lands at the derived count
     # instead of fanning a tiny graph out to the session default
     partitions = _derived_partitions(und)
-    with _shuffle_scope(und.sparkSession, partitions):
+    with partition_scope(und.sparkSession, partitions):
         und = und.repartition(partitions, "dst").cache()
         labels = (
             und.select(F.col("src").alias("key"))
@@ -326,7 +301,7 @@ def label_propagation(edges: DataFrame, max_iter: int = 5) -> DataFrame:
             labels = (
                 labels.join(best, "key", "left")
                 .select("key", F.coalesce("new_label", "label").alias("label"))
-                .localCheckpoint()
+                .transform(cut)
             )
     return labels
 
@@ -367,7 +342,7 @@ def scc(
     keyed shuffles on (src|dst) — the CC plan shape; closure is never
     materialized (the ORACLE does that, engine-side this stays
     iterative)."""
-    remaining = _pairs(edges).localCheckpoint()
+    remaining = cut(_pairs(edges))
     spark = edges.sparkSession
     assigned = spark.createDataFrame([], "key string, scc_id string")
     # the UNASSIGNED node set is carried across rounds explicitly — it
@@ -380,7 +355,7 @@ def scc(
         remaining.select(F.col("src").alias("key"))
         .unionByName(remaining.select(F.col("dst").alias("key")))
         .dropDuplicates()
-        .localCheckpoint()
+        .transform(cut)
     )
 
     for _ in range(max_rounds):
@@ -398,8 +373,8 @@ def scc(
                 break
             assigned = assigned.unionByName(
                 singles.select("key", F.col("key").alias("scc_id"))
-            ).localCheckpoint()
-            nodes = nodes.join(singles, "key", "left_anti").localCheckpoint()
+            ).transform(cut)
+            nodes = cut(nodes.join(singles, "key", "left_anti"))
             active = nodes
             remaining = (
                 remaining.join(
@@ -409,7 +384,7 @@ def scc(
                     nodes.withColumnRenamed("key", "dst"), "dst", "left_semi"
                 )
                 .select("src", "dst")
-                .localCheckpoint()
+                .transform(cut)
             )
         if nodes.limit(1).isEmpty():
             continue
@@ -436,7 +411,7 @@ def scc(
                         < F.col("color")
                     ).alias("changed"),
                 )
-                .localCheckpoint()
+                .transform(cut)
             )
             color = new.select("key", "color")
             if new.where("changed").limit(1).isEmpty():
@@ -460,7 +435,7 @@ def scc(
             )
             .where(F.col("c_src") == F.col("c_dst"))
             .select("src", "dst")
-            .localCheckpoint()
+            .transform(cut)
         )
         for _ in range(max_inner):
             nbr = (
@@ -487,7 +462,7 @@ def scc(
                         "changed"
                     ),
                 )
-                .localCheckpoint()
+                .transform(cut)
             )
             flags = new.select("key", "color", "flag")
             if new.where("changed").limit(1).isEmpty():
@@ -497,15 +472,15 @@ def scc(
         members = flags.where("flag").select(
             "key", F.col("color").alias("scc_id")
         )
-        assigned = assigned.unionByName(members).localCheckpoint()
+        assigned = cut(assigned.unionByName(members))
         done = members.select("key")
-        active = active.join(done, "key", "left_anti").localCheckpoint()
+        active = cut(active.join(done, "key", "left_anti"))
         remaining = (
             remaining.join(
                 done.withColumnRenamed("key", "src"), "src", "left_anti"
             )
             .join(done.withColumnRenamed("key", "dst"), "dst", "left_anti")
-            .localCheckpoint()
+            .transform(cut)
         )
     if not active.limit(1).isEmpty():
         raise RuntimeError("scc: outer round budget exhausted")
@@ -556,7 +531,7 @@ def weighted_sssp(
             .agg(F.min("dist").alias("dist"))
         )
         if k % checkpoint_every == 0 and k < rounds:
-            dist = dist.localCheckpoint()
+            dist = cut(dist)
     return dist
 
 
@@ -589,7 +564,7 @@ def hits(
     e = _pairs(edges).cache()
     if partitions is None:
         partitions = _derived_partitions(e)
-    with _shuffle_scope(e.sparkSession, partitions):
+    with partition_scope(e.sparkSession, partitions):
         # BOTH edge orientations cached pre-partitioned (r13): each
         # half-step joins on the OTHER key (hub step on src, authority
         # step on dst), so one orientation alone re-shuffled the whole
@@ -611,7 +586,7 @@ def hits(
             # localCheckpoint is load-bearing: ``raw`` feeds BOTH the global
             # max and the rescale — left unmaterialized, each half-step
             # doubles the plan tree (2^(2*iterations) analysis blowup).
-            raw = raw.localCheckpoint()
+            raw = cut(raw)
             mx = raw.agg(F.max("raw").alias("mx"))
             return raw.crossJoin(F.broadcast(mx)).select(
                 "key",
@@ -647,7 +622,7 @@ def hits(
         return (
             h.select("key", F.col("score").alias("hub_micro"))
             .join(a.select("key", F.col("score").alias("auth_micro")), "key")
-            .localCheckpoint()
+            .transform(cut)
         )
 
 
@@ -881,11 +856,11 @@ def personalized_pagerank(
     # tasks dominate per-round cost), hash both loop sides on the join
     # key once, and materialize the static degree-annotated edge side
     # so every round reuses its Exchange instead of re-shuffling.
-    # _shuffle_scope (r13): plan the loop at the derived count so the
+    # partition_scope (r13): plan the loop at the derived count so the
     # contrib aggregation lands on that partitioning — one Exchange per
     # iteration (see pagerank).
     partitions = _derived_partitions(e)
-    with _shuffle_scope(e.sparkSession, partitions):
+    with partition_scope(e.sparkSession, partitions):
         e = e.repartition(partitions, "src")
         nodes = (
             e.select(F.col("src").alias("key"))
@@ -936,4 +911,4 @@ def personalized_pagerank(
                 .alias("ppr_micro"),
             )
         # materialize inside the scope (the pagerank rationale)
-        return ranks.where(F.col("ppr_micro") > 0).localCheckpoint()
+        return cut(ranks.where(F.col("ppr_micro") > 0))

@@ -10,7 +10,8 @@ DataFrame).
 - connected components: hash-min label propagation to fixpoint
 
 Scale notes: every iteration is one shuffle on the join key; frontiers
-are cached and localCheckpoint()ed every few rounds to cut lineage. The
+are cached and cut (``_util.cut``) every few rounds to truncate
+lineage — a lost cut block fails the job unless reliable cuts are on. The
 taxonomy is depth≤14 (ranks, Population.fs:22-37), so closure terminates
 in ≤14 rounds with |closure| ≈ |nodes| x avg-depth rows.
 """
@@ -19,6 +20,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from biodiversity_graph_db_spark.operators._util import cut
 
 
 def out_hop(edges: DataFrame, relation: str | None = None) -> DataFrame:
@@ -109,7 +112,7 @@ def transitive_closure(
             # plan nests all previous rounds and Catalyst re-analyzes the
             # whole tower every iteration (driver time grows
             # quadratically with depth)
-            .localCheckpoint()
+            .transform(cut)
         )
         if nxt.count() == 0:
             break
@@ -138,7 +141,7 @@ def bfs(edges: DataFrame, start_key: str, max_hops: int = 10) -> DataFrame:
         )
         if nxt.isEmpty():
             break
-        visited = visited.unionByName(nxt).localCheckpoint()
+        visited = cut(visited.unionByName(nxt))
         frontier = nxt
     return visited
 
@@ -186,7 +189,7 @@ def connected_components(edges: DataFrame, max_iter: int = 20) -> DataFrame:
                     < F.col("component")
                 ).alias("changed"),
             )
-            .localCheckpoint()
+            .transform(cut)
         )
         labels = new_labels.select("key", "component")
         if new_labels.where("changed").limit(1).isEmpty():

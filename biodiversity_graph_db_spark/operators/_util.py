@@ -16,6 +16,8 @@ would widen the accumulator to DECIMAL(38,0) — same shape, wider type.
 
 from __future__ import annotations
 
+from contextlib import contextmanager
+
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
@@ -136,26 +138,25 @@ def _row_group_starved(df, par: int) -> bool:
 
 
 def cut(df):
-    """Lineage cut + single materialization for a multi-consumer
-    intermediate (the E2/E3 discipline: checkpoint the expensive cut
-    once so downstream consumers re-read instead of recomputing).
+    """Lineage cut + eager materialization — the package's only one.
+    Every iterative loop's per-round truncation, every multi-consumer
+    intermediate (the E2/E3 discipline: materialize the expensive part
+    once so downstream consumers re-read instead of recomputing), every
+    scratch-store result that must outlive its directory, and every
+    streaming store overwrite goes through here.
 
     Storage mode is a config switch, plan shape is identical in both
     (downstream consumes a ``Scan ExistingRDD`` either way — tested):
 
-    - default: ``localCheckpoint`` — executor-local blocks, no extra
-      I/O path, right for single-process/bench runs;
+    - default: ``localCheckpoint`` — executor-local, non-replicated
+      blocks, no extra I/O path, right for single-process/bench runs.
+      A lost block is NOT recomputed: the lineage is gone, so losing
+      an executor that holds one fails the job;
     - ``spark.graft.cuts.reliable=true``: reliable ``.checkpoint()``
       to the SparkContext checkpoint dir (set it via
       ``spark.graft.cuts.dir`` or ``setCheckpointDir``) — the
-      production deployment choice for CORPUS-PROPORTIONAL cuts
-      (T26/T28/D12/T32/D13/T37/T38), where losing an executor mid-job
-      would otherwise recompute the whole upstream stage on localCheckpoint's
-      non-replicated blocks (SCALE §19's documented trade).
-
-    Bounded artifacts (vocab tables, |classes| grids, centroid sets)
-    can stay on plain ``localCheckpoint`` — recomputing them is cheap
-    and replicating them buys nothing.
+      production deployment choice, where every cut survives the loss
+      of the executor that computed it (SCALE §19's documented trade).
 
     Cleanup contract (ADVICE r9): reliable checkpoint files are only
     ever removed by the ContextCleaner, and only when
@@ -179,6 +180,46 @@ def cut(df):
             )
         sc.setCheckpointDir(conf_dir)
     return df.checkpoint(eager=True)
+
+
+def shuffle_ceiling(spark) -> int:
+    """The session's ``spark.sql.shuffle.partitions`` as an int — the
+    ceiling every derived partition count is clamped to.  Managed
+    platforms ship non-numeric values (e.g. 'auto'); fall back to the
+    context's parallelism (ADVICE r12)."""
+    try:
+        return int(spark.conf.get("spark.sql.shuffle.partitions"))
+    except (TypeError, ValueError):
+        return spark.sparkContext.defaultParallelism
+
+
+@contextmanager
+def partition_scope(spark, n: int):
+    """Scope ``spark.sql.shuffle.partitions`` to ``n`` for the body,
+    restoring the caller's value on exit (exception-safe).
+
+    The conf is read at PLAN time, i.e. at the first action, so callers
+    must materialize (``cut``/count, or start the stream) inside the
+    scope.  Two users:
+
+    - iterative graph loops (guide §2.4): the loop's cached sides are
+      hash-partitioned on the join key at the DERIVED count, but every
+      per-iteration groupBy/join otherwise plans its Exchange at the
+      SESSION count — EnsureRequirements then re-shuffles the cached
+      side (or the aggregation output) every round to reconcile the
+      two.  Planning the whole loop at one count makes each iteration
+      run exactly ONE Exchange (the inherent message shuffle);
+    - canned streaming drains: the state partition count is locked in
+      at stream start.
+
+    Serial-harness assumption: a concurrently planned query in the same
+    session would pick up the scoped value."""
+    old = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", str(n))
+    try:
+        yield
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", old)
 
 
 def plan_bytes(df) -> int:

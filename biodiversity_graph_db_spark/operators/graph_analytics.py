@@ -24,6 +24,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from biodiversity_graph_db_spark.graph import algorithms, motif
+from biodiversity_graph_db_spark.operators._util import cut, partition_scope
 from biodiversity_graph_db_spark.operators.graph_queries import (
     _EV_EDGES,
     _evidence_store,
@@ -317,17 +318,12 @@ def kcore_peel(
     same one-shuffle-per-iteration budget as PageRank/LPA;
     localCheckpoint truncates the per-round lineage.  Input ``und`` is
     the canonical undirected edge list (a < b)."""
-    from biodiversity_graph_db_spark.graph.algorithms import (
-        _derived_partitions,
-        _shuffle_scope,
-    )
-
     # materialize the input once (round 0 otherwise recomputes the
     # upstream graph mint for BOTH its consumers), then run the eager
-    # peel loop at the derived partition count (r13, _shuffle_scope)
-    edges = und.localCheckpoint()
-    partitions = _derived_partitions(edges)
-    with _shuffle_scope(edges.sparkSession, partitions):
+    # peel loop at the derived partition count (r13, partition_scope)
+    edges = cut(und)
+    partitions = algorithms._derived_partitions(edges)
+    with partition_scope(edges.sparkSession, partitions):
         for _ in range(rounds):
             deg = (
                 edges.select(F.col("a").alias("v"))
@@ -339,14 +335,14 @@ def kcore_peel(
             edges = (
                 edges.join(alive.withColumnRenamed("v", "a"), "a")
                 .join(alive.withColumnRenamed("v", "b"), "b")
-                .localCheckpoint()
+                .transform(cut)
             )
         return (
             edges.select(F.col("a").alias("v"))
             .unionByName(edges.select(F.col("b").alias("v")))
             .groupBy("v")
             .agg(F.count(F.lit(1)).cast("long").alias("core_degree"))
-            .localCheckpoint()
+            .transform(cut)
         )
 
 
@@ -1022,7 +1018,7 @@ def g21_degree_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
     scan+undirect subtree re-ran 18×); the degree table is
     vertex-sized, joined on its natural key, then everything collapses
     map-side to one row."""
-    und = algorithms.undirect(li_graph(spark, sf_dir)).localCheckpoint()
+    und = cut(algorithms.undirect(li_graph(spark, sf_dir)))
     deg = und.groupBy(F.col("src").alias("key")).agg(
         F.count("*").cast("long").alias("d")
     )

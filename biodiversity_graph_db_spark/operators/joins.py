@@ -461,7 +461,7 @@ def j10_bloom_semijoin(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select("o_orderkey", "o_orderpriority")
     bloom = bloom_build(
         qual.select(F.col("o_orderkey").alias("k")), "k"
-    ).localCheckpoint()  # bounded (<= BLOOM_WIDTH rows); feeds K probes
+    ).transform(cut)  # bounded (<= BLOOM_WIDTH rows); feeds K probes
     pruned = li
     for j in range(BLOOM_K):
         pruned = pruned.join(
@@ -1283,7 +1283,7 @@ def q15_top_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "total_revenue"
             )
         )
-        .localCheckpoint()  # consumed twice: max subquery + filter
+        .transform(cut)  # consumed twice: max subquery + filter
     )
     mx = rev.agg(F.max("total_revenue").alias("mx"))
     s = table(spark, sf_dir, "supplier").select("s_suppkey", "s_name")

@@ -48,6 +48,7 @@ from biodiversity_graph_db_spark.functions.validation import (
     wkt_polygon_points,
 )
 from biodiversity_graph_db_spark.operators._util import (
+    cut,
     davg,
     dquant,
     dsum,
@@ -553,7 +554,7 @@ def geo3_points_in_areas(spark: SparkSession, sf_dir: str) -> DataFrame:
     # promoted context table is STORED and both sides scan it
     promoted = promote_context_cols(
         mint_context_nodes(spark, sf_dir)
-    ).localCheckpoint()
+    ).transform(cut)
     return points_in_areas(promoted)
 
 
@@ -686,7 +687,7 @@ def geo4_radius_sites(spark: SparkSession, sf_dir: str) -> DataFrame:
     # one materialization for both join sides (cf. GEO3)
     promoted = promote_context_cols(
         mint_context_nodes(spark, sf_dir)
-    ).localCheckpoint()
+    ).transform(cut)
     pts = promoted.where(F.col("kind").isin("Site", "SiteDMS")).select(
         "key",
         "pt_lat",
@@ -905,7 +906,7 @@ def geo6_area_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     rest of the GEO family."""
     promoted = promote_context_cols(
         mint_context_nodes(spark, sf_dir)
-    ).localCheckpoint()
+    ).transform(cut)
 
     def side(prefix: str) -> DataFrame:
         ar = promoted.where(F.col("kind") == "Area").select(
@@ -1075,7 +1076,7 @@ def geo4b_radius_sites_geodesic(
     difference can never pick a different site across engines."""
     promoted = promote_context_cols(
         mint_context_nodes(spark, sf_dir)
-    ).localCheckpoint()
+    ).transform(cut)
     pts = promoted.where(F.col("kind").isin("Site", "SiteDMS")).select(
         "key",
         "pt_lat",
@@ -1243,7 +1244,7 @@ def _promoted_spread(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return spread(
         promoted, probe=table(spark, sf_dir, "customer")
-    ).localCheckpoint()
+    ).transform(cut)
 
 
 def area_point_count(promoted: DataFrame) -> DataFrame:
@@ -1266,7 +1267,6 @@ def area_point_count_parts(
     """The two GEO7 branches, separately: (interior synopsis sums,
     boundary filter-refine counts) — exposed so non-hollowness of each
     branch is assertable per mint (the D7/T9 discipline)."""
-    from biodiversity_graph_db_spark.operators._util import cut
 
     pts = promoted.where(F.col("kind").isin("Site", "SiteDMS")).select(
         "pt_lat",
@@ -1624,7 +1624,6 @@ def polygon_point_count_parts(
     area instead of the whole O(perimeter) boundary — measured 5×+ on
     the gen_sf10 probe, where the all-boundary ray-cast spelling was
     the dominant cost."""
-    from biodiversity_graph_db_spark.operators._util import cut
 
     pts = promoted.where(F.col("kind").isin("Site", "SiteDMS")).select(
         "pt_lat",
@@ -1863,7 +1862,6 @@ def nearest_topk_parts(
     # ONE corpus rollup; the coarse synopsis is a rollup of the fine one
     # ((fx2, fy2) determines (fx, fy)), cut so both probes and the
     # candidate stage read the materialized bounded table
-    from biodiversity_graph_db_spark.operators._util import cut
 
     cells2 = cut(
         pts.groupBy("fx", "fy", "fx2", "fy2").agg(
@@ -2268,7 +2266,6 @@ def geo9_density_store(spark: SparkSession, sf_dir: str) -> DataFrame:
     much history streamed through.  Replay safety is the CM (lineage,
     batch_id) stamp — grouped sums would double-count a replayed
     batch, so one is skipped, not re-merged."""
-    import shutil
     import tempfile
 
     from biodiversity_graph_db_spark.streaming.ingest import (
@@ -2280,8 +2277,9 @@ def geo9_density_store(spark: SparkSession, sf_dir: str) -> DataFrame:
     feed = promoted.select("key", "kind", "pt_lat", "pt_lon").withColumn(
         "ck", F.regexp_extract(F.col("key"), "([0-9]+)$", 1).cast("long")
     )
-    tmp = tempfile.mkdtemp(prefix="geo9_density_")
-    try:
+    with tempfile.TemporaryDirectory(
+        prefix="geo9_density_", ignore_cleanup_errors=True
+    ) as tmp:
         drain_parquet_batches(
             feed,
             "ck",
@@ -2305,7 +2303,5 @@ def geo9_density_store(spark: SparkSession, sf_dir: str) -> DataFrame:
                 ),
             )
             .orderBy("cx", "cy")
-            .localCheckpoint()  # materialize before the store dir dies
+            .transform(cut)
         )
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)

@@ -1190,7 +1190,6 @@ def st1_stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     eviction, mirroring how a production replay window is chosen
     (bounded-state trade documented in ``dedup_stream``; SCALE §18
     measured the horizon bounding state at gen_sf1)."""
-    import shutil
     import tempfile
 
     from biodiversity_graph_db_spark.streaming.ingest import (
@@ -1206,8 +1205,9 @@ def st1_stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     feed = base.unionByName(dups).withColumn(
         "bkey", F.col("event_id") + F.col("copy")
     )
-    tmp = tempfile.mkdtemp(prefix="st1_dedup_")
-    try:
+    with tempfile.TemporaryDirectory(
+        prefix="st1_dedup_", ignore_cleanup_errors=True
+    ) as tmp:
         out, ckpt = f"{tmp}/out", f"{tmp}/ckpt"
 
         def run(stream: DataFrame):
@@ -1231,10 +1231,8 @@ def st1_stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
                 (F.floor(F.col("value") * 10000) / 10000.0).alias("value_q"),
             )
             .orderBy("event_id")
-            .localCheckpoint()  # materialize before the sink dir dies
+            .transform(cut)
         )
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
 
 
 #: Shared click-mint CTE for ST2/ST2b (VERDICT r11 item 5: at sf0.01 the
@@ -1328,7 +1326,6 @@ def st2_stream_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     densified with the deterministic ``_st2_feed`` click mint
     (VERDICT r11 item 5) so the grade covers hundreds of in-window
     matches at sf0.01 instead of the organic 9."""
-    import shutil
     import tempfile
 
     from biodiversity_graph_db_spark.streaming.ingest import (
@@ -1341,8 +1338,9 @@ def st2_stream_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("event_type").isin("click", "purchase")
         )
     )
-    tmp = tempfile.mkdtemp(prefix="st2_attrib_")
-    try:
+    with tempfile.TemporaryDirectory(
+        prefix="st2_attrib_", ignore_cleanup_errors=True
+    ) as tmp:
         out, ckpt = f"{tmp}/out", f"{tmp}/ckpt"
 
         def run(stream: DataFrame):
@@ -1369,10 +1367,8 @@ def st2_stream_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "value_x10000",
             )
             .orderBy("purchase_id", "click_id")
-            .localCheckpoint()  # materialize before the sink dir dies
+            .transform(cut)
         )
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
 
 
 @query(
@@ -1407,7 +1403,6 @@ def st2b_unattributed(spark: SparkSession, sf_dir: str) -> DataFrame:
     machine's EVICTION path (emit-on-watermark-expiry), the complement
     of ST2's match path.  Same densified mint as ST2: odd purchases
     are the mostly-unattributed population (hundreds at sf0.01)."""
-    import shutil
     import tempfile
 
     from biodiversity_graph_db_spark.streaming.ingest import (
@@ -1419,7 +1414,7 @@ def st2b_unattributed(spark: SparkSession, sf_dir: str) -> DataFrame:
         table(spark, sf_dir, "events").where(
             F.col("event_type").isin("click", "purchase")
         )
-    ).localCheckpoint()
+    ).transform(cut)
     mx = ev.agg(F.max("ts").alias("mx")).collect()[0].mx
     sentinel = spark.createDataFrame(
         [(2 * 10**9, mx, -1, "click", 0.0, None),
@@ -1435,8 +1430,9 @@ def st2b_unattributed(spark: SparkSession, sf_dir: str) -> DataFrame:
         "value",
         "props",
     )
-    tmp = tempfile.mkdtemp(prefix="st2b_unattr_")
-    try:
+    with tempfile.TemporaryDirectory(
+        prefix="st2b_unattr_", ignore_cleanup_errors=True
+    ) as tmp:
         out, ckpt = f"{tmp}/out", f"{tmp}/ckpt"
 
         def run(stream: DataFrame):
@@ -1466,10 +1462,8 @@ def st2b_unattributed(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "value_x10000",
             )
             .orderBy("purchase_id")
-            .localCheckpoint()  # materialize before the sink dir dies
+            .transform(cut)
         )
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
 
 
 # --- ST3/ST4: the applyInPandasWithState paths as driver rows ----------------
@@ -1529,7 +1523,6 @@ def st3_session_store(spark: SparkSession, sf_dir: str) -> DataFrame:
     the stateful walk (open/extend/close, cross-batch state carry)
     against the declarative twin.  State is one open session per user,
     bounded by |active users| at any corpus size."""
-    import shutil
     import tempfile
 
     from biodiversity_graph_db_spark.streaming.ingest import (
@@ -1554,8 +1547,9 @@ def st3_session_store(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.lit(None).cast("string").alias("props"),
         )
     )
-    tmp = tempfile.mkdtemp(prefix="st3_sessions_")
-    try:
+    with tempfile.TemporaryDirectory(
+        prefix="st3_sessions_", ignore_cleanup_errors=True
+    ) as tmp:
         out, ckpt = f"{tmp}/out", f"{tmp}/ckpt"
 
         def run(stream: DataFrame):
@@ -1588,10 +1582,8 @@ def st3_session_store(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "total_value",
             )
             .orderBy("user_id", "start_s")
-            .localCheckpoint()  # materialize before the sink dir dies
+            .transform(cut)
         )
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
 
 
 @query(
@@ -1639,7 +1631,6 @@ def st4_asof_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
     the event mint never collides click/purchase timestamps, so max-pid
     alone is a total tie-break; state is one (pid, ts) pair per user —
     O(|users|) at any corpus size."""
-    import shutil
     import tempfile
 
     from biodiversity_graph_db_spark.streaming.ingest import (
@@ -1651,8 +1642,9 @@ def st4_asof_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = table(spark, sf_dir, "events").where(
         F.col("event_type").isin("click", "purchase")
     )
-    tmp = tempfile.mkdtemp(prefix="st4_asof_")
-    try:
+    with tempfile.TemporaryDirectory(
+        prefix="st4_asof_", ignore_cleanup_errors=True
+    ) as tmp:
         out, ckpt = f"{tmp}/out", f"{tmp}/ckpt"
 
         def run(stream: DataFrame):
@@ -1683,7 +1675,5 @@ def st4_asof_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
                 ),
             )
             .orderBy("click_id")
-            .localCheckpoint()  # materialize before the sink dir dies
+            .transform(cut)
         )
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)

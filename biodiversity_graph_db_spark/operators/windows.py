@@ -11,6 +11,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from biodiversity_graph_db_spark.operators._util import cut
 from biodiversity_graph_db_spark.registry import query
 from biodiversity_graph_db_spark.tables import table
 
@@ -967,7 +968,6 @@ def w16_rollup_store(spark: SparkSession, sf_dir: str) -> DataFrame:
     (one Expand + one combinable aggregate) merged into a store that
     stays |buckets| rows no matter how much history streamed; the
     result is localCheckpoint-ed before the temp store dies."""
-    import shutil
     import tempfile
 
     from biodiversity_graph_db_spark.streaming.ingest import (
@@ -976,8 +976,9 @@ def w16_rollup_store(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     ev = table(spark, sf_dir, "events")
-    tmp = tempfile.mkdtemp(prefix="w16_rollup_store_")
-    try:
+    with tempfile.TemporaryDirectory(
+        prefix="w16_rollup_store_", ignore_cleanup_errors=True
+    ) as tmp:
         drain_parquet_batches(
             ev,
             "event_id",
@@ -988,7 +989,5 @@ def w16_rollup_store(spark: SparkSession, sf_dir: str) -> DataFrame:
             spark.read.parquet(f"{tmp}/store")
             .select("bucket_day", "bucket_hour", "n", "value_x10000")
             .orderBy("bucket_day", "bucket_hour")
-            .localCheckpoint()  # materialize before the store dir dies
+            .transform(cut)
         )
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)

@@ -29,6 +29,12 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
+from biodiversity_graph_db_spark.operators._util import (
+    cut,
+    partition_scope,
+    shuffle_ceiling,
+)
+
 EVENTS_STREAM_SCHEMA = StructType(
     [
         StructField("event_id", LongType(), True),
@@ -426,7 +432,7 @@ def run_kmv_sketch(
             .drop("rk")
         )
         # overwrite via staging: the ledger is tiny (groups × k rows)
-        kept.localCheckpoint().write.mode("overwrite").parquet(out_path)
+        _overwrite(kept, out_path)
 
     return (
         events.writeStream.foreachBatch(upsert)
@@ -556,6 +562,14 @@ def _stamp(df: DataFrame, batch_id: int, app_id: str | None) -> DataFrame:
     ).withColumn("last_app", F.lit(app_id).cast("string"))
 
 
+def _overwrite(df: DataFrame, path: str) -> None:
+    """Replace the parquet store at ``path`` with ``df``.  ``df``'s plan
+    reads ``path`` itself (the store merged with the micro-batch), and
+    an overwrite deletes the files before the write job reads them —
+    so ``df`` is cut first and the write reads the cut."""
+    cut(df).write.mode("overwrite").parquet(path)
+
+
 def cm_sketch_upsert(
     batch: DataFrame,
     batch_id: int,
@@ -584,9 +598,7 @@ def cm_sketch_upsert(
             .groupBy("j", "pos")
             .agg(F.sum("cnt").cast("long").alias("cnt"))
         )
-    _stamp(fresh, batch_id, app_id).localCheckpoint().write.mode(
-        "overwrite"
-    ).parquet(out_path)
+    _overwrite(_stamp(fresh, batch_id, app_id), out_path)
 
 
 def run_cm_sketch(events: DataFrame, out_path: str, checkpoint: str):
@@ -720,7 +732,7 @@ def run_bloom_sketch(events: DataFrame, out_path: str, checkpoint: str):
             fresh = fresh.unionByName(
                 spark.read.parquet(out_path)
             ).distinct()
-        fresh.localCheckpoint().write.mode("overwrite").parquet(out_path)
+        _overwrite(fresh, out_path)
 
     return (
         events.writeStream.foreachBatch(upsert)
@@ -755,9 +767,7 @@ def hist_sketch_upsert(
             .groupBy("bin")
             .agg(F.sum("cnt").cast("long").alias("cnt"))
         )
-    _stamp(fresh, batch_id, app_id).localCheckpoint().write.mode(
-        "overwrite"
-    ).parquet(out_path)
+    _overwrite(_stamp(fresh, batch_id, app_id), out_path)
 
 
 def run_hist_sketch(events: DataFrame, out_path: str, checkpoint: str):
@@ -806,9 +816,7 @@ def multires_rollup_upsert(
                 F.sum("value_x10000").cast("long").alias("value_x10000"),
             )
         )
-    _stamp(fresh, batch_id, app_id).localCheckpoint().write.mode(
-        "overwrite"
-    ).parquet(out_path)
+    _overwrite(_stamp(fresh, batch_id, app_id), out_path)
 
 
 def run_multires_rollup(events: DataFrame, out_path: str, checkpoint: str):
@@ -1237,9 +1245,7 @@ def nb_model_upsert(
                 .groupBy(*keys)
                 .agg(F.sum(val).cast("long").alias(val))
             )
-        _stamp(merged, batch_id, app_id).localCheckpoint().write.mode(
-            "overwrite"
-        ).parquet(path)
+        _overwrite(_stamp(merged, batch_id, app_id), path)
 
 
 def run_nb_model(docs: DataFrame, out_path: str, checkpoint: str):
@@ -1313,12 +1319,7 @@ def _drain_shuffle_partitions(
         for f in files:
             if f.endswith(".parquet"):
                 total += os.path.getsize(os.path.join(root, f))
-    try:
-        ceiling = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    except (TypeError, ValueError):
-        # managed platforms ship non-numeric values (e.g. 'auto');
-        # fall back to the context's parallelism (ADVICE r12)
-        ceiling = spark.sparkContext.defaultParallelism
+    ceiling = shuffle_ceiling(spark)
     if total == 0:
         # byte probe found no local parquet (non-local src, empty dir):
         # never under-partition a real deployment's drain — keep the
@@ -1326,22 +1327,6 @@ def _drain_shuffle_partitions(
         # item 4)
         return max(1, ceiling)
     return max(1, min(ceiling, total // partition_bytes + 1))
-
-
-class _drain_conf:
-    """Set session shuffle partitions for the duration of a drain
-    (state partition count is locked in at stream start), restoring
-    the caller's value afterwards."""
-
-    def __init__(self, spark, n: int):
-        self.spark, self.n = spark, n
-
-    def __enter__(self):
-        self.old = self.spark.conf.get("spark.sql.shuffle.partitions")
-        self.spark.conf.set("spark.sql.shuffle.partitions", str(self.n))
-
-    def __exit__(self, *exc):
-        self.spark.conf.set("spark.sql.shuffle.partitions", self.old)
 
 
 def write_feed_batches(
@@ -1421,7 +1406,7 @@ def drain_parquet_batches(
         .option("maxFilesPerTrigger", 1)
         .parquet(src)
     )
-    with _drain_conf(spark, _drain_shuffle_partitions(spark, src)):
+    with partition_scope(spark, _drain_shuffle_partitions(spark, src)):
         q = run(stream).start()
         try:
             ok = q.awaitTermination(timeout_s)
@@ -1487,7 +1472,7 @@ def drain_parquet_batches_ordered(
         .option("maxFilesPerTrigger", 1)
         .parquet(src)
     )
-    with _drain_conf(
+    with partition_scope(
         spark, _drain_shuffle_partitions(spark, src, partition_bytes)
     ):
         q = run(stream).start()
@@ -1547,9 +1532,7 @@ def grid_density_upsert(
                 F.min("min_site").alias("min_site"),
             )
         )
-    _stamp(fresh, batch_id, app_id).localCheckpoint().write.mode(
-        "overwrite"
-    ).parquet(out_path)
+    _overwrite(_stamp(fresh, batch_id, app_id), out_path)
 
 
 def run_grid_density(ctx_stream: DataFrame, out_path: str, checkpoint: str):

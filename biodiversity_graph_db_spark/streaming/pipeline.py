@@ -35,6 +35,7 @@ from biodiversity_graph_db_spark.extensions.textstats import (
     split_name,
     token_count,
 )
+from biodiversity_graph_db_spark.operators._util import cut
 
 DOCUMENTS_STREAM_SCHEMA = StructType(
     [
@@ -261,7 +262,7 @@ def run_pretraining_ingest_neardup(
             .drop("rk")
         )
 
-        bands = doc_bands(fresh).localCheckpoint()
+        bands = cut(doc_bands(fresh))
         ledger_path = f"{out_path}/_bands"
         all_bands = bands
         if _path_exists(spark, ledger_path):
@@ -362,7 +363,7 @@ def shard_export_upsert(
 
     tag = hashlib.md5((app_id or "default").encode()).hexdigest()[:12]
     dest = f"{out_dir}/shards_delta/app={tag}/batch={batch_id}"
-    assigned = shard_assign(batch).localCheckpoint()
+    assigned = cut(shard_assign(batch))
     (
         assigned.repartition("lang", "shard_id")
         .sortWithinPartitions("doc_id")
@@ -469,7 +470,7 @@ def compact_shard_manifests(spark: SparkSession, out_dir: str) -> None:
     finish_manifest_compaction(spark, out_dir)  # complete any stranded swap
     if not _path_exists(spark, f"{out_dir}/manifest_delta"):
         return
-    merged = read_shard_manifest(spark, out_dir).localCheckpoint()
+    merged = cut(read_shard_manifest(spark, out_dir))
     tmp = f"{out_dir}/manifest_base__compact_tmp"
     # one row per (app, batch, lang, shard): driver/broadcast-scale by
     # construction, so a single output file is the right layout

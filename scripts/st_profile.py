@@ -18,6 +18,10 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F  # noqa: E402
 
+from biodiversity_graph_db_spark.operators._util import (  # noqa: E402
+    partition_scope,
+)
+
 
 def _timed(label, fn, acc):
     t0 = time.perf_counter()
@@ -70,7 +74,7 @@ def profile_st1(spark, sf_dir):
                 .option("maxFilesPerTrigger", 1)
                 .parquet(src)
             )
-            with ing._drain_conf(
+            with partition_scope(
                 spark, ing._drain_shuffle_partitions(spark, src)
             ):
                 q = run(stream).start()
@@ -130,7 +134,7 @@ def profile_st2(spark, sf_dir):
             )
             cs = stream.where(F.col("event_type") == "click")
             ps = stream.where(F.col("event_type") == "purchase")
-            with ing._drain_conf(
+            with partition_scope(
                 spark, ing._drain_shuffle_partitions(spark, src)
             ):
                 q = (
@@ -197,7 +201,7 @@ def profile_st4(spark, sf_dir):
                 .option("maxFilesPerTrigger", 1)
                 .parquet(src)
             )
-            with ing._drain_conf(
+            with partition_scope(
                 spark,
                 ing._drain_shuffle_partitions(
                     spark, src, DRAIN_PARTITION_BYTES_PY

@@ -7,6 +7,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from biodiversity_graph_db_spark.graph import algorithms, motif
+from biodiversity_graph_db_spark.operators._util import partition_scope
 
 
 def _edges(spark, pairs):
@@ -415,7 +416,7 @@ class TestPersonalizedPagerank:
 
 class TestShuffleScope:
     """r13 loop-partitioning mechanism (guide §2.4): when an iterative
-    round is PLANNED inside ``algorithms._shuffle_scope`` at the same
+    round is PLANNED inside ``partition_scope`` at the same
     count its cached sides were hashed to, every Exchange in the round
     (the aggregation shuffle, the cached sides' own repartitions) lands
     at the LOOP count — the keyed joins are co-partitioned and no
@@ -446,7 +447,7 @@ class TestShuffleScope:
             spark, [(f"n{i}", f"n{(i * 7 + 1) % 40}") for i in range(40)]
         )
         scope = (
-            algorithms._shuffle_scope(spark, p)
+            partition_scope(spark, p)
             if scoped
             else contextlib.nullcontext()
         )
@@ -504,3 +505,13 @@ class TestShuffleScope:
         # the aggregation shuffled at the session count, so the round
         # mixes partition counts — the mismatch the scope removes
         assert sess in self._exchange_counts(plan), plan
+
+    def test_scope_restores_callers_value_when_body_raises(self, spark):
+        key = "spark.sql.shuffle.partitions"
+        before = spark.conf.get(key)
+        scoped = int(before) + 1
+        with pytest.raises(RuntimeError, match="loop failed"):
+            with partition_scope(spark, scoped):
+                assert spark.conf.get(key) == str(scoped)
+                raise RuntimeError("loop failed")
+        assert spark.conf.get(key) == before

@@ -1044,7 +1044,7 @@ class TestRound7FourthWavePlans:
         """Each PPR round is one keyed join + combinable mass sum; the
         teleport vector is a column expression, never a driver map.
         r13: the loop now materializes inside its shuffle scope (one
-        Exchange per round — graph/algorithms._shuffle_scope), so the
+        Exchange per round — operators/_util.partition_scope), so the
         visible plan is the checkpoint scan; the per-round aggregation
         shape is pinned by test_graph's loop-scope probe instead."""
         plan = _plan(spark, sf_dir, "G19_personalized_pagerank")
@@ -2049,3 +2049,78 @@ class TestWritePathPlans:
         finally:
             spark.conf.set("spark.graft.cuts.reliable", "false")
             spark.conf.unset("spark.graft.cuts.dir")
+
+
+class TestOneCutPrimitive:
+    """``operators/_util.cut`` is the package's only lineage cut, so
+    ``spark.graft.cuts.reliable`` reaches every materialization: loop
+    truncations, multi-consumer intermediates, scratch-store results and
+    streaming store overwrites alike."""
+
+    def test_no_raw_checkpoint_calls_outside_util(self):
+        """Any ``.localCheckpoint()``/``.checkpoint()`` call outside
+        ``_util`` would bypass the reliable switch.  The scan walks the
+        AST, so comments and docstrings naming the calls do not count."""
+        import ast
+        import pathlib
+
+        import biodiversity_graph_db_spark as pkg
+
+        root = pathlib.Path(pkg.__file__).parent
+        util = root / "operators" / "_util.py"
+        raw = [
+            f"{path.relative_to(root)}:{node.lineno}"
+            for path in sorted(root.rglob("*.py"))
+            if path != util
+            for node in ast.walk(ast.parse(path.read_text(), str(path)))
+            if isinstance(node, ast.Call)
+            and isinstance(node.func, ast.Attribute)
+            and node.func.attr in ("localCheckpoint", "checkpoint")
+        ]
+        assert raw == []
+
+    @pytest.mark.parametrize(
+        "name",
+        [
+            # iterative loop: traversal.connected_components' round cuts
+            "G3_connected_components",
+            # foreachBatch store overwrite: one cut per micro-batch, plus
+            # the result read back from the store
+            "T42_cm_store",
+            # scratch-store result, collected after its sink dir is gone
+            "ST1_stream_dedup",
+        ],
+    )
+    def test_reliable_mode_reaches_every_cut_family(
+        self, spark, sf_dir, tmp_path, name
+    ):
+        """Reliable mode returns the default-mode rows, and the query's
+        cuts land as RDD files under the SparkContext checkpoint dir."""
+        import os
+
+        jsc = spark.sparkContext._jsc.sc()
+
+        def rdd_dirs() -> set[str]:
+            if not jsc.getCheckpointDir().isDefined():
+                return set()
+            root = jsc.getCheckpointDir().get().removeprefix("file:")
+            if not os.path.isdir(root):
+                return set()
+            return {d for d in os.listdir(root) if d.startswith("rdd-")}
+
+        q = registry.QUERIES[name]
+        want = sorted(map(tuple, q(spark, sf_dir).collect()))
+        before = rdd_dirs()
+        spark.conf.set("spark.graft.cuts.reliable", "true")
+        spark.conf.set("spark.graft.cuts.dir", str(tmp_path / "cuts"))
+        try:
+            # hold the result: the ContextCleaner may delete the files of
+            # cuts no longer referenced, but not those of its own cut
+            res = q(spark, sf_dir)
+            got = sorted(map(tuple, res.collect()))
+            new = rdd_dirs() - before
+        finally:
+            spark.conf.set("spark.graft.cuts.reliable", "false")
+            spark.conf.unset("spark.graft.cuts.dir")
+        assert got == want
+        assert new, "no cut of this query reached the checkpoint dir"
