@@ -19,6 +19,7 @@ from collections.abc import Callable
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from biodiversity_graph_db_spark import storage
 from biodiversity_graph_db_spark.operators._util import (
     cut,
     dquant,
@@ -762,9 +763,7 @@ def write_ivf_index(
     )
     # a fresh build starts with no streaming deltas; any left from a
     # previous index at this path are keyed by the old centroids
-    jvm = spark._jvm
-    hp = jvm.org.apache.hadoop.fs.Path(f"{path}/assigned_delta")
-    hp.getFileSystem(spark._jsc.hadoopConfiguration()).delete(hp, True)
+    storage.delete(spark, f"{path}/assigned_delta")
 
 
 def _read_assigned(spark: SparkSession, path: str) -> DataFrame:
@@ -781,10 +780,7 @@ def _read_assigned(spark: SparkSession, path: str) -> DataFrame:
     finish_ivf_compaction(spark, path)
     base = spark.read.parquet(f"{path}/assigned")
     delta_dir = f"{path}/assigned_delta"
-    jvm = spark._jvm
-    hpath = jvm.org.apache.hadoop.fs.Path(delta_dir)
-    fs = hpath.getFileSystem(spark._jsc.hadoopConfiguration())
-    if not fs.exists(hpath):
+    if not storage.exists(spark, delta_dir):
         return base
     try:
         delta = spark.read.parquet(delta_dir).select(*base.columns)
@@ -1108,7 +1104,7 @@ def _accept_ivf_rebuild(
     Refuses (raises) unless BOTH candidate datasets are still present:
     while a ``swap=False`` candidate sits unmarked through a recall
     A/B, any concurrent index read's heal deletes it (that is the
-    unmarked-candidate contract).  Without this check, ``fs.create``
+    unmarked-candidate contract).  Without this check, ``write_text``
     would fabricate a ``_COMPLETE``-only tmp dir, and the roll-forward
     would then treat both sub-swaps as already done and sweep
     ``assigned_delta`` — silently dropping streamed appends with no
@@ -1117,13 +1113,9 @@ def _accept_ivf_rebuild(
     deltas is exactly right), which is why ``finish_ivf_rebuild`` must
     NOT refuse that state — the fabrication is prevented here, at the
     only place ``_COMPLETE`` is ever created."""
-    jvm = spark._jvm
-    conf = spark._jsc.hadoopConfiguration()
-    hpath = jvm.org.apache.hadoop.fs.Path
-    fs = hpath(path).getFileSystem(conf)
     tmp = f"{path}__rebuild"
     for sub in ("centroids", "assigned"):
-        if not fs.exists(hpath(f"{tmp}/{sub}")):
+        if not storage.exists(spark, f"{tmp}/{sub}"):
             raise RuntimeError(
                 f"ivf rebuild candidate at {tmp} lost {sub} (healed away "
                 "by a concurrent read?) — refusing to mark _COMPLETE; "
@@ -1131,7 +1123,7 @@ def _accept_ivf_rebuild(
             )
     if _between_check_and_mark is not None:  # test seam for the race below
         _between_check_and_mark()
-    fs.create(hpath(f"{tmp}/_COMPLETE"), True).close()
+    storage.write_text(spark, f"{tmp}/_COMPLETE", "")
     # Re-verify AFTER the marker lands: the exists-check above is
     # check-then-act, so a concurrent reader's heal can still delete
     # the unmarked candidate between the check and the create — which
@@ -1140,8 +1132,8 @@ def _accept_ivf_rebuild(
     # retract the marker and raise; the tmp is back to the unmarked
     # state the heal path already handles.  (ADVICE r10.)
     for sub in ("centroids", "assigned"):
-        if not fs.exists(hpath(f"{tmp}/{sub}")):
-            fs.delete(hpath(f"{tmp}/_COMPLETE"), False)
+        if not storage.exists(spark, f"{tmp}/{sub}"):
+            storage.delete(spark, f"{tmp}/_COMPLETE", recursive=False)
             raise RuntimeError(
                 f"ivf rebuild candidate at {tmp} lost {sub} between the "
                 "pre-check and the _COMPLETE write — marker retracted; "
@@ -1160,26 +1152,18 @@ def finish_ivf_rebuild(spark: SparkSession, path: str) -> None:
       two sub-swaps from wherever they stopped (a tmp sub-dir already
       renamed away is skipped; its destination must exist), sweep the
       stale deltas (keyed by the OLD centroids), drop the tmp."""
-    jvm = spark._jvm
-    hpath = jvm.org.apache.hadoop.fs.Path
-    fs = hpath(path).getFileSystem(spark._jsc.hadoopConfiguration())
     tmp = f"{path}__rebuild"
-    if not fs.exists(hpath(tmp)):
-        return
-    if not fs.exists(hpath(f"{tmp}/_COMPLETE")):
-        fs.delete(hpath(tmp), True)  # rebuild died mid-write
+    if not storage.complete(spark, tmp, marker="_COMPLETE"):
         return
     for sub in ("centroids", "assigned"):
-        src, dst = hpath(f"{tmp}/{sub}"), hpath(f"{path}/{sub}")
-        if not fs.exists(src):
-            if not fs.exists(dst):
-                raise RuntimeError(f"rebuild lost {sub} on both sides")
-            continue  # this sub's swap already completed
-        fs.delete(dst, True)
-        if not fs.rename(src, dst) and not fs.exists(dst):
-            raise RuntimeError(f"index swap rename failed for {sub}")
-    fs.delete(hpath(f"{path}/assigned_delta"), True)
-    fs.delete(hpath(tmp), True)
+        src, dst = f"{tmp}/{sub}", f"{path}/{sub}"
+        if storage.exists(spark, src):
+            storage.replace(spark, src, dst)
+        elif not storage.exists(spark, dst):
+            raise RuntimeError(f"rebuild lost {sub} on both sides")
+        # else: this sub's swap already completed
+    storage.delete(spark, f"{path}/assigned_delta")
+    storage.delete(spark, tmp)
 
 
 def recluster_if_drifted(
@@ -1224,9 +1208,7 @@ def recluster_if_drifted(
         _accept_ivf_rebuild(spark, path)
         return True
     # reject: the re-train would have made serving worse
-    jvm = spark._jvm
-    hp = jvm.org.apache.hadoop.fs.Path(tmp)
-    hp.getFileSystem(spark._jsc.hadoopConfiguration()).delete(hp, True)
+    storage.delete(spark, tmp)
     return False
 
 
@@ -1639,35 +1621,25 @@ def v8_mmr_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def finish_ivf_compaction(spark: SparkSession, path: str) -> None:
     """Self-heal a stranded IVF delta compaction (idempotent; run by
-    every index read and by ``compact_ivf_deltas`` itself) — the
-    ``finish_compaction`` discipline from the versioned log applied to
-    the index:
+    every index read and by ``compact_ivf_deltas`` itself) through
+    ``storage.promote``:
 
     - ``assigned__compact_tmp`` WITHOUT ``_SUCCESS``: the merge write
       died; the live index was never touched — drop the garbage tmp.
     - tmp WITH ``_SUCCESS``: the merged table is complete and subsumes
       the base AND every delta (the merge read base + deltas), so roll
-      FORWARD from any crash point: delete the base (idempotent),
-      rename tmp into place, drop the deltas.  Every step re-runnable.
+      FORWARD: delete the base, rename tmp into place, drop every
+      delta (the reader does not shadow, so the sweep is wholesale).
 
     Without this, a crash between the swap's delete and rename strands
     the index with NO ``assigned`` dir (data still safe in tmp, but
-    readers fail); a crash after the rename but before the delta sweep
-    would DOUBLE-count deltas on the next read."""
-    jvm = spark._jvm
-    hpath = jvm.org.apache.hadoop.fs.Path
-    fs = hpath(path).getFileSystem(spark._jsc.hadoopConfiguration())
-    tmp = f"{path}/assigned__compact_tmp"
-    if not fs.exists(hpath(tmp)):
-        return
-    if not fs.exists(hpath(f"{tmp}/_SUCCESS")):
-        fs.delete(hpath(tmp), True)  # merge died mid-write; index intact
-        return
-    dst = hpath(f"{path}/assigned")
-    fs.delete(dst, True)
-    if not fs.rename(hpath(tmp), dst) and not fs.exists(dst):
-        raise RuntimeError("ivf compaction recovery rename failed")
-    fs.delete(hpath(f"{path}/assigned_delta"), True)
+    readers fail).  A crash after the rename but before the delta sweep
+    leaves no tmp to resume from, so the next read counts the folded
+    deltas twice."""
+    if storage.promote(
+        spark, f"{path}/assigned__compact_tmp", f"{path}/assigned"
+    ):
+        storage.delete(spark, f"{path}/assigned_delta")
 
 
 def compact_ivf_deltas(spark: SparkSession, path: str) -> None:
@@ -1678,17 +1650,14 @@ def compact_ivf_deltas(spark: SparkSession, path: str) -> None:
     directory per micro-batch (directory-listing cost is the real
     degradation mode of per-batch deltas at scale).
 
-    CRASH-SAFE via the versioned-log protocol: the merged table is
+    CRASH-SAFE via ``storage.promote``: the merged table is
     fully written (``_SUCCESS`` present) under ``__compact_tmp`` before
     the live index is touched, and ``finish_ivf_compaction`` — run
     here, by every index read, and standalone — completes the swap
     from ANY crash point.  Single-maintainer contract as
     ``recluster_ivf_index`` (don't run concurrently with appends)."""
-    jvm = spark._jvm
-    hpath = jvm.org.apache.hadoop.fs.Path
-    fs = hpath(path).getFileSystem(spark._jsc.hadoopConfiguration())
     finish_ivf_compaction(spark, path)  # complete any stranded swap first
-    if not fs.exists(hpath(f"{path}/assigned_delta")):
+    if not storage.exists(spark, f"{path}/assigned_delta"):
         return
     merged = cut(_read_assigned(spark, path))
     tmp = f"{path}/assigned__compact_tmp"
@@ -2747,12 +2716,6 @@ def _codebook_fingerprint(cb_rows) -> str:
     return h.hexdigest()
 
 
-def _pq_fp_path(spark: SparkSession, path: str):
-    jvm = spark._jvm
-    hp = jvm.org.apache.hadoop.fs.Path(f"{path}/pq/codes/_CODEBOOK_FP")
-    return hp, hp.getFileSystem(spark._jsc.hadoopConfiguration())
-
-
 def pq_augment_index(spark: SparkSession, path: str) -> None:
     """Build the PQ sidecar for an existing IVF index: derive the
     deterministic md5-rank codebook from the index's OWN vector set
@@ -2802,10 +2765,11 @@ def pq_augment_index(spark: SparkSession, path: str) -> None:
     # under exactly this stored codebook" — it must not exist until
     # both are durable (underscore-prefixed file: invisible to the
     # parquet reader, removed by the codes overwrite above)
-    fp_path, fs = _pq_fp_path(spark, path)
-    out = fs.create(fp_path, True)
-    out.write(bytearray(_codebook_fingerprint(cb_stored.collect()).encode()))
-    out.close()
+    storage.write_text(
+        spark,
+        f"{path}/pq/codes/_CODEBOOK_FP",
+        _codebook_fingerprint(cb_stored.collect()),
+    )
 
 
 def ivfpq_topk_indexed(
@@ -2870,17 +2834,8 @@ def ivfpq_topk_indexed(
     # two writes (or a retention path rewrote one side) — refuse rather
     # than silently score codes under a codebook they weren't encoded
     # with (the ADC sums would be plausible garbage, the worst failure)
-    fp_path, fs = _pq_fp_path(spark, path)
-    stamped = None
-    if fs.exists(fp_path):
-        stream = fs.open(fp_path)
-        try:
-            stamped = bytes(
-                stream.readNBytes(64)
-            ).decode("ascii", "replace").strip()
-        finally:
-            stream.close()
-    if stamped != _codebook_fingerprint(cb_stored.collect()):
+    stamped = storage.read_text(spark, f"{path}/pq/codes/_CODEBOOK_FP")
+    if (stamped or "").strip() != _codebook_fingerprint(cb_stored.collect()):
         raise ValueError(
             f"PQ sidecar at {path}/pq is incoherent: the codes' "
             "_CODEBOOK_FP stamp is missing or does not match the stored "

@@ -30,31 +30,21 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from biodiversity_graph_db_spark import storage
 from biodiversity_graph_db_spark.graph.schema import (
     EDGES_SCHEMA,
     NODES_SCHEMA,
 )
 from biodiversity_graph_db_spark.graph.store import GraphStore
 from biodiversity_graph_db_spark.operators._util import measured_cut
-from biodiversity_graph_db_spark.operators.snapshot import read_as_of
+from biodiversity_graph_db_spark.operators.snapshot import (
+    _log_schema,
+    log_rows,
+    read_as_of,
+)
 
 #: edge identity — the same 4-tuple ``add_relations`` dedups on
 EDGE_KEY: tuple[str, ...] = ("source_key", "sink_key", "relation", "payload")
-
-
-def _log_schema(base):
-    """A table's on-disk LOG schema: base columns + deleted + version —
-    the single definition of the layout ``save_version`` writes and both
-    ``read_version`` and ``compact_graph_log`` read."""
-    from pyspark.sql.types import BooleanType, LongType, StructField
-
-    return type(base)(
-        list(base.fields)
-        + [
-            StructField("deleted", BooleanType(), True),
-            StructField("version", LongType(), True),
-        ]
-    )
 
 
 def table_delta(
@@ -107,28 +97,6 @@ class VersionConflictError(RuntimeError):
     and retry on the new head (optimistic concurrency)."""
 
 
-def _hfs(spark: SparkSession, path: str):
-    """(PathClass, FileSystem) for ``path`` via the JVM Hadoop FS API —
-    backend-agnostic (local, HDFS, object store)."""
-    jvm = spark._jvm
-    conf = spark._jsc.hadoopConfiguration()
-    hpath = jvm.org.apache.hadoop.fs.Path
-    return hpath, hpath(path).getFileSystem(conf)
-
-
-def _list_versions(fs, hpath, dir_path: str) -> set[int]:
-    """Version numbers present as ``version=N`` partition dirs (empty
-    set if the dir doesn't exist)."""
-    p = hpath(dir_path)
-    out: set[int] = set()
-    if fs.exists(p):
-        for st in fs.listStatus(p):
-            name = st.getPath().getName()
-            if name.startswith("version="):
-                out.add(int(name.split("=", 1)[1]))
-    return out
-
-
 def _marker_path(path: str, version: int) -> str:
     # the filename is EXACTLY the version (zero-padded for lexicographic
     # order): create-exclusive on this one name is what arbitrates the
@@ -136,31 +104,15 @@ def _marker_path(path: str, version: int) -> str:
     return f"{path}/_commits/{version:020d}.commit"
 
 
-def _list_markers(fs, hpath, path: str) -> set[int]:
-    """Committed versions from the ``_commits`` marker dir — one
-    directory listing."""
-    p = hpath(f"{path}/_commits")
-    out: set[int] = set()
-    if fs.exists(p):
-        for st in fs.listStatus(p):
-            name = st.getPath().getName()
-            if name.endswith(".commit"):
-                out.add(int(name[: -len(".commit")]))
-    return out
+def _markers(spark: SparkSession, path: str) -> set[int]:
+    """Claimed versions: one listing of the ``_commits`` marker dir."""
+    return storage.numbered(spark, f"{path}/_commits", suffix=".commit")
 
 
-def _read_marker_txn(spark: SparkSession, fs, hpath, marker: str) -> str:
+def _read_marker_txn(spark: SparkSession, path: str, version: int) -> str:
     """The staging txn id recorded inside a commit marker (recovery
     only — the hot path never reads marker contents)."""
-    jvm = spark._jvm
-    stream = fs.open(hpath(marker))
-    reader = jvm.java.io.BufferedReader(
-        jvm.java.io.InputStreamReader(stream, "UTF-8")
-    )
-    try:
-        return (reader.readLine() or "").strip()
-    finally:
-        reader.close()
+    return (storage.read_text(spark, _marker_path(path, version)) or "").strip()
 
 
 class VersionedGraphLog:
@@ -237,38 +189,20 @@ class VersionedGraphLog:
         have written), and ``read_as_of``'s explicit schema types it."""
         stage = f"{self.path}/_staging/{txn}"
         for df, sub in ((node_delta, "nodes"), (edge_delta, "edges")):
-            cols = [c for c in df.columns if c not in ("version", "deleted")]
-            out = df.select(
-                *cols,
-                (
-                    F.col("deleted")
-                    if "deleted" in df.columns
-                    else F.lit(False)
-                ).alias("deleted"),
-            )
-            out.write.mode("overwrite").parquet(f"{stage}/{sub}")
+            log_rows(df).write.mode("overwrite").parquet(f"{stage}/{sub}")
 
     def _cas_marker(self, version: int, txn: str) -> None:
         """Atomically claim ``version`` via create-exclusive on the
         marker file; raises ``VersionConflictError`` if another writer
         already owns it.  The marker body records the staging txn so a
         crashed winner's publish can be completed by recovery."""
-        hpath, fs = _hfs(self.spark, self.path)
-        marker = hpath(_marker_path(self.path, version))
-        try:
-            stream = fs.create(marker, False)  # throws if it exists
-        except Exception as exc:  # Py4J wraps FileAlreadyExists in IOEx
-            if fs.exists(marker):  # classify: lost race vs real IO error
-                raise VersionConflictError(
-                    f"version {version} already committed by another "
-                    "writer; reopen the log (open_log) and retry against "
-                    "the new head"
-                ) from exc
-            raise
-        try:
-            stream.write(bytearray(txn, "utf-8"))
-        finally:
-            stream.close()
+        marker = _marker_path(self.path, version)
+        if not storage.write_text(self.spark, marker, txn, overwrite=False):
+            raise VersionConflictError(
+                f"version {version} already committed by another "
+                "writer; reopen the log (open_log) and retry against "
+                "the new head"
+            )
 
     def _publish(self, version: int, txn: str) -> None:
         """Rename the staged dirs into the logs' ``version=N``
@@ -276,22 +210,22 @@ class VersionedGraphLog:
         tolerant: a side whose partition already exists is skipped, and
         a rename lost to a concurrent ``recover_log`` (a reader opening
         the log mid-publish helps complete this very commit) counts as
-        done as long as the destination exists — only a rename that
-        failed with NO destination is a real error."""
-        hpath, fs = _hfs(self.spark, self.path)
+        done as long as the destination exists (``storage.rename``)."""
         nodes_log, edges_log = self._log_paths()
         stage = f"{self.path}/_staging/{txn}"
         for sub, log_dir in (("nodes", nodes_log), ("edges", edges_log)):
-            dst = hpath(f"{log_dir}/version={version}")
-            if fs.exists(dst):
-                continue
-            fs.mkdirs(hpath(log_dir))  # rename needs the parent to exist
-            ok = fs.rename(hpath(f"{stage}/{sub}"), dst)
-            if not ok and not fs.exists(dst):
-                raise RuntimeError(
-                    f"publish rename failed: {stage}/{sub} -> {dst}"
-                )
-        fs.delete(hpath(stage), True)
+            storage.rename(
+                self.spark, f"{stage}/{sub}", f"{log_dir}/version={version}"
+            )
+        storage.delete(self.spark, stage)
+
+    def _published(self) -> tuple[set[int], set[int]]:
+        """The ``version=N`` partitions present in the nodes and the
+        edges log."""
+        return tuple(
+            storage.numbered(self.spark, log_dir, prefix="version=")
+            for log_dir in self._log_paths()
+        )
 
     def _disk_head(self) -> int:
         """Highest CLAIMED version on disk (commit pre-check only): max
@@ -299,12 +233,8 @@ class VersionedGraphLog:
         existed) the partition listings of both logs.  Deliberately
         counts in-flight markers — a writer about to reuse a claimed
         number should fail fast, before paying for its delta."""
-        hpath, fs = _hfs(self.spark, self.path)
-        nodes_log, edges_log = self._log_paths()
-        head = max(_list_markers(fs, hpath, self.path), default=0)
-        for log_dir in (nodes_log, edges_log):
-            head = max(head, max(_list_versions(fs, hpath, log_dir), default=0))
-        return head
+        nodes, edges = self._published()
+        return max(_markers(self.spark, self.path) | nodes | edges, default=0)
 
     def _committed_head(self) -> int:
         """Highest FULLY-PUBLISHED version: the max version whose
@@ -318,12 +248,8 @@ class VersionedGraphLog:
         empty deltas — has both partition dirs (staging writes the
         parquet dirs before the CAS), so this never undercounts a
         finished commit."""
-        hpath, fs = _hfs(self.spark, self.path)
-        nodes_log, edges_log = self._log_paths()
-        both = _list_versions(fs, hpath, nodes_log) & _list_versions(
-            fs, hpath, edges_log
-        )
-        return max(both, default=0)
+        nodes, edges = self._published()
+        return max(nodes & edges, default=0)
 
     def commit(self, store: GraphStore) -> int:
         """Append the delta between the current head state and ``store``
@@ -367,8 +293,7 @@ class VersionedGraphLog:
         except VersionConflictError:
             # lost the race AFTER staging: remove the invisible staged
             # rows so the loser leaves no trace, then surface the retry
-            hpath, fs = _hfs(self.spark, self.path)
-            fs.delete(hpath(f"{self.path}/_staging/{txn}"), True)
+            storage.delete(self.spark, f"{self.path}/_staging/{txn}")
             raise
         self._publish(version, txn)
         self._head = version
@@ -414,49 +339,19 @@ def recover_log(spark: SparkSession, path: str) -> None:
         finish_compaction,
     )
 
-    hpath, fs = _hfs(spark, path)
-    nodes_log = f"{path}/nodes_log"
-    edges_log = f"{path}/edges_log"
-    for log_dir in (nodes_log, edges_log):
+    log = VersionedGraphLog(spark, path)
+    for log_dir in log._log_paths():
         finish_compaction(spark, log_dir)
     # one listing per side (not per-version exists() probes): markers
     # scale with history, recovery stays O(3 listings + torn commits)
-    present = {
-        log_dir: _list_versions(fs, hpath, log_dir)
-        for log_dir in (nodes_log, edges_log)
-    }
-    for version in sorted(_list_markers(fs, hpath, path)):
-        missing = [
-            (log_dir, sub)
-            for log_dir, sub in (
-                (nodes_log, "nodes"),
-                (edges_log, "edges"),
-            )
-            if version not in present[log_dir]
-        ]
-        if not missing:
-            continue
-        txn = _read_marker_txn(
-            spark, fs, hpath, _marker_path(path, version)
-        )
-        stage = f"{path}/_staging/{txn}"
-        if not txn or not fs.exists(hpath(stage)):
-            continue  # compacted-away version (or vacuumed staging)
-        for log_dir, sub in missing:
-            fs.mkdirs(hpath(log_dir))
-            dst = hpath(f"{log_dir}/version={version}")
-            # race-tolerant: the writer whose commit we are helping may
-            # still be alive and publishing concurrently — losing the
-            # rename to it (or finding the partition already in place)
-            # is success, not failure
-            if fs.exists(dst):
-                continue
-            ok = fs.rename(hpath(f"{stage}/{sub}"), dst)
-            if not ok and not fs.exists(dst):
-                raise RuntimeError(
-                    f"recovery rename failed for {stage}/{sub}"
-                )
-        fs.delete(hpath(stage), True)
+    nodes, edges = log._published()
+    for version in sorted(_markers(spark, path) - (nodes & edges)):
+        txn = _read_marker_txn(spark, path, version)
+        # no txn or no staging: a compacted-away version (or vacuumed
+        # staging).  Otherwise redo the publish; the writer whose commit
+        # this helps may still be publishing, which _publish tolerates
+        if txn and storage.exists(spark, f"{path}/_staging/{txn}"):
+            log._publish(version, txn)
 
 
 def open_log(spark: SparkSession, path: str) -> VersionedGraphLog:
@@ -506,29 +401,26 @@ def compact_graph_log(log: VersionedGraphLog, upto: int) -> None:
         list(EDGE_KEY),
         schema=_log_schema(EDGES_SCHEMA),
     )
-    hpath, fs = _hfs(log.spark, log.path)
-    markers = _list_markers(fs, hpath, log.path)
+    spark = log.spark
+    markers = _markers(spark, log.path)
     for version in markers:
         if version < upto:
-            fs.delete(hpath(_marker_path(log.path, version)), False)
+            storage.delete(
+                spark, _marker_path(log.path, version), recursive=False
+            )
     live_txns = {
-        _read_marker_txn(
-            log.spark, fs, hpath, _marker_path(log.path, version)
-        )
+        _read_marker_txn(spark, log.path, version)
         for version in markers
         if version >= upto
     }
-    staging_root = hpath(f"{log.path}/_staging")
-    if fs.exists(staging_root):
-        for st in fs.listStatus(staging_root):
-            if st.getPath().getName() not in live_txns:
-                fs.delete(st.getPath(), True)
+    staging_root = f"{log.path}/_staging"
+    for txn in storage.children(spark, staging_root):
+        if txn not in live_txns:
+            storage.delete(spark, f"{staging_root}/{txn}")
     # record the compaction horizon (for log_history's base flag) —
     # written last: a crash before this point leaves the flag stale,
     # which is cosmetic (history labeling), never a correctness input
-    out = fs.create(hpath(f"{log.path}/_compact_horizon"), True)
-    out.write(bytearray(str(upto).encode("utf-8")))
-    out.close()
+    storage.write_text(spark, f"{log.path}/_compact_horizon", str(upto))
     log._head_store = None  # resolved layout changed; re-read on demand
 
 
@@ -559,20 +451,10 @@ def log_history(log: VersionedGraphLog) -> DataFrame:
 
     n = _counts(nodes_log, NODES_SCHEMA, "node")
     e = _counts(edges_log, EDGES_SCHEMA, "edge")
-    hpath, fs = _hfs(spark, log.path)
-    markers = _list_markers(fs, hpath, log.path)
-    versions = {
-        int(v)
-        for v in _list_versions(fs, hpath, nodes_log)
-        | _list_versions(fs, hpath, edges_log)
-        | markers
-    }
-    horizon = None
-    if fs.exists(hpath(f"{log.path}/_compact_horizon")):
-        raw = _read_marker_txn(
-            spark, fs, hpath, f"{log.path}/_compact_horizon"
-        )
-        horizon = int(raw) if raw else None
+    nodes, edges = log._published()
+    versions = nodes | edges | _markers(spark, log.path)
+    raw = storage.read_text(spark, f"{log.path}/_compact_horizon")
+    horizon = int(raw) if raw and raw.strip() else None
     base = spark.createDataFrame(
         [(v, v == horizon) for v in sorted(versions)],
         "version long, is_compacted_base boolean",

@@ -38,6 +38,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
+from biodiversity_graph_db_spark import storage
+
 _TIMELINE_EXTENT = """
 CREATE OR REPLACE TEMPORARY VIEW {p}timeline_extent AS
 SELECT e.source_key AS timeline_key,
@@ -208,13 +210,9 @@ def export_dwc_archive(df, path: str) -> None:
         .csv(core_dir)
     )
     spark = df.sparkSession
-    jvm = spark._jvm
-    hpath = jvm.org.apache.hadoop.fs.Path
-    fs = hpath(core_dir).getFileSystem(spark._jsc.hadoopConfiguration())
     parts = sorted(
         name
-        for st in fs.listStatus(hpath(core_dir))
-        for name in [st.getPath().getName()]
+        for name in storage.children(spark, core_dir)
         if name.startswith("part-") and name.endswith(".csv")
     )
     locations = "\n      ".join(
@@ -237,8 +235,4 @@ def export_dwc_archive(df, path: str) -> None:
   </core>
 </archive>
 """
-    stream = fs.create(hpath(f"{path}/meta.xml"), True)
-    try:
-        stream.write(bytearray(meta, "utf-8"))
-    finally:
-        stream.close()
+    storage.write_text(spark, f"{path}/meta.xml", meta)

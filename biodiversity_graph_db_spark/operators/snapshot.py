@@ -28,6 +28,7 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from biodiversity_graph_db_spark import storage
 from biodiversity_graph_db_spark.operators._util import dquant, sql_dquant
 from biodiversity_graph_db_spark.registry import query
 from biodiversity_graph_db_spark.tables import table
@@ -281,6 +282,34 @@ def apply_diff(
 # --- versioned storage: upsert log + time-travel reads --------------------
 
 
+def _log_schema(base):
+    """A table's on-disk LOG schema: base columns + deleted + version —
+    the single definition of the layout ``save_version`` writes and
+    ``read_as_of`` / ``compact_versions`` read."""
+    from pyspark.sql.types import BooleanType, LongType, StructField
+
+    return type(base)(
+        list(base.fields)
+        + [
+            StructField("deleted", BooleanType(), True),
+            StructField("version", LongType(), True),
+        ]
+    )
+
+
+def log_rows(df: DataFrame) -> DataFrame:
+    """One version's rows in log shape: ``df``'s columns (less any
+    ``version``/``deleted``) plus ``deleted`` (false where ``df`` has
+    none).  The version is the partition directory's name."""
+    cols = [c for c in df.columns if c not in ("version", "deleted")]
+    return df.select(
+        *cols,
+        (
+            F.col("deleted") if "deleted" in df.columns else F.lit(False)
+        ).alias("deleted"),
+    )
+
+
 def save_version(
     df: DataFrame, path: str, version: int, key_cols: Sequence[str]
 ) -> None:
@@ -288,14 +317,7 @@ def save_version(
     ``deleted=true``) to a versioned log partitioned by version.  Each
     version stores only its delta, so log size ∝ total change volume,
     and version partitions prune at the directory level on read."""
-    cols = [c for c in df.columns if c not in ("version", "deleted")]
-    out = df.select(
-        *cols,
-        (
-            F.col("deleted") if "deleted" in df.columns else F.lit(False)
-        ).alias("deleted"),
-        F.lit(version).cast("long").alias("version"),
-    )
+    out = log_rows(df).withColumn("version", F.lit(version).cast("long"))
     out.write.mode("append").partitionBy("version").parquet(path)
 
 
@@ -383,7 +405,9 @@ def sd3_time_travel_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     save_version(base, path, 1, ["key"])
     save_version(v2, path, 2, ["key"])
     save_version(v3, path, 3, ["key"])
-    return read_as_of(spark, path, 2, ["key"]).orderBy("key")
+    # explicit schema: a zero-row customer table writes no version dirs
+    schema = _log_schema(base.schema)
+    return read_as_of(spark, path, 2, ["key"], schema=schema).orderBy("key")
 
 
 def _build_sd4_log(spark: SparkSession, sf_dir: str):
@@ -512,7 +536,7 @@ def compact_versions(
 
     Shape: one as-of read (the existing partition-pruned latest-per-key
     plan) written as a single version partition, then directory swaps
-    via the Hadoop FS API.  CRASH-SAFE (round-6): the resolved base is
+    through ``storage``.  CRASH-SAFE (round-6): the resolved base is
     fully written (``_SUCCESS`` present) under ``__compact_tmp`` before
     any old partition is touched, and the delete+rename swap is
     completable from ANY crash point — ``finish_compaction`` (run here,
@@ -554,43 +578,16 @@ def finish_compaction(spark: SparkSession, path: str) -> None:
       rename the base into place, drop the tmp.  Re-running after a
       crash inside THIS sequence redoes only the remaining steps.
     """
-    jvm = spark._jvm
-    conf = spark._jsc.hadoopConfiguration()
-    hpath = jvm.org.apache.hadoop.fs.Path
-    tmp = hpath(f"{path}__compact_tmp")
-    fs = tmp.getFileSystem(conf)
-    if not fs.exists(tmp):
+    tmp = f"{path}__compact_tmp"
+    if not storage.complete(spark, tmp):
         return
-    if not fs.exists(hpath(f"{path}__compact_tmp/_SUCCESS")):
-        fs.delete(tmp, True)  # torn base write; live log untouched
-        return
-    upto = None
-    for st in fs.listStatus(tmp):
-        name = st.getPath().getName()
-        if name.startswith("version="):
-            upto = int(name.split("=", 1)[1])
-    if upto is None:  # _SUCCESS but no partition: empty base — discard
-        fs.delete(tmp, True)
-        return
-    root = hpath(path)
-    if fs.exists(root):
-        for st in fs.listStatus(root):
-            name = st.getPath().getName()
-            if (
-                name.startswith("version=")
-                and int(name.split("=", 1)[1]) <= upto
-            ):
-                fs.delete(st.getPath(), True)
-    else:
-        fs.mkdirs(root)
-    if not fs.rename(
-        hpath(f"{path}__compact_tmp/version={upto}"),
-        hpath(f"{path}/version={upto}"),
-    ):
-        raise RuntimeError(
-            f"compaction swap rename failed for {path} at version {upto}"
-        )
-    fs.delete(tmp, True)
+    upto = max(storage.numbered(spark, tmp, prefix="version="), default=None)
+    if upto is not None:  # else _SUCCESS but no partition: empty base
+        for v in storage.numbered(spark, path, prefix="version="):
+            if v <= upto:
+                storage.delete(spark, f"{path}/version={v}")
+        storage.rename(spark, f"{tmp}/version={upto}", f"{path}/version={upto}")
+    storage.delete(spark, tmp)
 
 
 @query(
@@ -632,8 +629,9 @@ def sd5_compacted_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
     save_version(base, path, 1, ["key"])
     save_version(v2, path, 2, ["key"])
     save_version(v3, path, 3, ["key"])
-    compact_versions(spark, path, 2, ["key"])
-    return read_as_of(spark, path, 2, ["key"]).orderBy("key")
+    schema = _log_schema(base.schema)
+    compact_versions(spark, path, 2, ["key"], schema=schema)
+    return read_as_of(spark, path, 2, ["key"], schema=schema).orderBy("key")
 
 
 def scd2_merge(

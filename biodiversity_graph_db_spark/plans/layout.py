@@ -20,6 +20,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from biodiversity_graph_db_spark import storage
+
 
 def write_bucketed(
     df: DataFrame,
@@ -96,20 +98,10 @@ def compact_partitioned(
     jumbo partition would instead salt the repartition key — same
     call shape, documented here rather than auto-guessed."""
     def _count_files(p: str) -> int:
-        # Hadoop FileSystem API, not glob/os.path: correct on HDFS and
-        # object stores — exactly where small-file compaction matters —
-        # matching the repo's _path_exists discipline (streaming.pipeline).
-        jvm = spark._jvm
-        hpath = jvm.org.apache.hadoop.fs.Path(p)
-        fs = hpath.getFileSystem(spark._jsc.hadoopConfiguration())
-        if not fs.exists(hpath):
-            return 0
-        it = fs.listFiles(hpath, True)  # recursive
-        n = 0
-        while it.hasNext():
-            if it.next().getPath().getName().endswith(".parquet"):
-                n += 1
-        return n
+        # Hadoop FileSystem API (storage), not glob/os.path: correct on
+        # HDFS and object stores — exactly where small-file compaction
+        # matters
+        return sum(n.endswith(".parquet") for n in storage.files(spark, p))
 
     df = spark.read.parquet(src_path)
     rows = df.count()

@@ -29,6 +29,7 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
+from biodiversity_graph_db_spark import storage
 from biodiversity_graph_db_spark.operators._util import (
     cut,
     partition_scope,
@@ -161,12 +162,8 @@ def merge_events_into_graph(
         # explicit sink-existence check: only the first-batch/path-missing
         # case may skip the anti-join; any real read failure (corrupt
         # file, FS error, permissions) must propagate or replay would
-        # silently duplicate keys (cf. pipeline._path_exists)
-        from biodiversity_graph_db_spark.streaming.pipeline import (
-            _path_exists,
-        )
-
-        if _path_exists(spark, nodes_path):
+        # silently duplicate keys
+        if storage.exists(spark, nodes_path):
             existing = spark.read.parquet(nodes_path).select("key")
             fresh = new_nodes.join(existing, "key", "left_anti")
         else:
@@ -413,7 +410,6 @@ def run_kmv_sketch(
     from biodiversity_graph_db_spark.extensions.sketches import (
         portable_hash,
     )
-    from biodiversity_graph_db_spark.streaming.pipeline import _path_exists
 
     def upsert(batch: DataFrame, batch_id: int) -> None:
         spark = batch.sparkSession
@@ -421,7 +417,7 @@ def run_kmv_sketch(
             F.col("event_type"),
             portable_hash(F.col("user_id")).alias("h"),
         ).distinct()
-        if _path_exists(spark, out_path):
+        if storage.exists(spark, out_path):
             fresh = fresh.unionByName(
                 spark.read.parquet(out_path)
             ).distinct()
@@ -585,11 +581,10 @@ def cm_sketch_upsert(
     a DIFFERENT lineage restarting at batch 0 is new work, not a
     replay (``_replayed``)."""
     from biodiversity_graph_db_spark.extensions.sketches import cm_counters
-    from biodiversity_graph_db_spark.streaming.pipeline import _path_exists
 
     spark = batch.sparkSession
     fresh = cm_counters(batch, "user_id")
-    if _path_exists(spark, out_path):
+    if storage.exists(spark, out_path):
         stored = spark.read.parquet(out_path)
         if _replayed(stored, batch_id, app_id):
             return  # replayed batch — its counts are already in
@@ -723,12 +718,11 @@ def run_bloom_sketch(events: DataFrame, out_path: str, checkpoint: str):
     from biodiversity_graph_db_spark.extensions.sketches import (
         bloom_build,
     )
-    from biodiversity_graph_db_spark.streaming.pipeline import _path_exists
 
     def upsert(batch: DataFrame, batch_id: int) -> None:
         spark = batch.sparkSession
         fresh = bloom_build(batch.select(F.col("user_id").alias("k")), "k")
-        if _path_exists(spark, out_path):
+        if storage.exists(spark, out_path):
             fresh = fresh.unionByName(
                 spark.read.parquet(out_path)
             ).distinct()
@@ -754,11 +748,10 @@ def hist_sketch_upsert(
     from biodiversity_graph_db_spark.extensions.sketches import (
         histogram_bins,
     )
-    from biodiversity_graph_db_spark.streaming.pipeline import _path_exists
 
     spark = batch.sparkSession
     fresh = histogram_bins(batch, "value")
-    if _path_exists(spark, out_path):
+    if storage.exists(spark, out_path):
         stored = spark.read.parquet(out_path)
         if _replayed(stored, batch_id, app_id):
             return
@@ -800,11 +793,10 @@ def multires_rollup_upsert(
     batch, so a (lineage, batch_id) at or below the stored stamp is
     skipped; a NEW stream lineage restarting at 0 keeps merging."""
     from biodiversity_graph_db_spark.operators.windows import multires_cells
-    from biodiversity_graph_db_spark.streaming.pipeline import _path_exists
 
     spark = batch.sparkSession
     fresh = multires_cells(batch)
-    if _path_exists(spark, out_path):
+    if storage.exists(spark, out_path):
         stored = spark.read.parquet(out_path)
         if _replayed(stored, batch_id, app_id):
             return  # replayed batch — its cells are already in
@@ -938,127 +930,35 @@ def lsh_band_upsert(
     bands.write.mode("overwrite").partitionBy("band").parquet(out)
 
 
+#: the band store's row type, partition columns (app, batch, band) included
+_LSH_BANDS_SCHEMA = (
+    "doc_id long, band_key string, app string, batch long, band long"
+)
+
+
 def read_lsh_bands(spark: SparkSession, store_path: str) -> DataFrame:
     """The dedup-facing view of the maintained band store: the
     compacted ``base`` (ONE dataset, partitioned by band) plus any
     per-batch deltas written since, columns
-    ``(doc_id, band_key, app, batch, band)``.
-
-    DELTA SHADOWS BASE on ``(app, batch)`` — the
-    ``read_shard_manifest`` rule (streaming/pipeline.py): a batch
-    present in both (a post-compaction checkpoint replay reborn its
-    delta dir, or a crash between the compaction swap and the delta
-    sweep left both copies) is read from the delta only.  The two
-    copies are identical by the idempotent-directory contract, so
-    shadowing makes both races invisible rather than double-counted.
+    ``(doc_id, band_key, app, batch, band)``.  A delta shadows the base
+    on ``(app, batch)``, and a store no upsert has touched yet reads as
+    zero rows (``storage.read_shadowed``).
 
     Scale shape: ``band`` is the storage partition key on BOTH halves
     (leaf key in the delta tree, partitionBy key in the base), so a
     band-bucket dup probe prunes to one bucket per half regardless of
     how the rows are split between them."""
-    from biodiversity_graph_db_spark.streaming.pipeline import _path_exists
-
-    finish_lsh_band_compaction(spark, store_path)
-    base_dir = f"{store_path}/base"
-    delta_dir = f"{store_path}/delta"
-    cols = [
-        F.col("doc_id"),
-        F.col("band_key"),
-        F.col("app").cast("string").alias("app"),
-        F.col("batch").cast("long").alias("batch"),
-        F.col("band").cast("long").alias("band"),
-    ]
-    has_base = _path_exists(spark, base_dir)
-    has_delta = _path_exists(spark, delta_dir)
-    if not has_base and not has_delta:
-        # a reader pointed at a store no upsert has touched yet: an
-        # empty band table, not an opaque path-not-found AnalysisException
-        # (ADVICE r11) — same five-column schema as the populated reads.
-        return spark.createDataFrame(
-            [],
-            "doc_id long, band_key string, app string,"
-            " batch long, band long",
-        )
-    if not has_base:
-        return spark.read.parquet(delta_dir).select(*cols)
-    base = spark.read.parquet(base_dir).select(*cols)
-    if not has_delta:
-        return base
-    delta = spark.read.parquet(delta_dir).select(*cols)
-    replayed = delta.select("app", "batch").distinct()
-    return base.join(replayed, ["app", "batch"], "left_anti").unionByName(
-        delta.select(*base.columns)
+    return storage.read_shadowed(
+        spark, f"{store_path}/base", f"{store_path}/delta", _LSH_BANDS_SCHEMA
     )
-
-
-#: Sidecar (inside the merged base) naming the delta dirs a compaction
-#: actually folded — the sweep's scope.  Underscore-prefixed, so parquet
-#: readers of ``base/`` treat it as hidden metadata.
-_FOLDED_SIDECAR = "_folded_dirs.txt"
-
-
-def _sweep_folded_deltas(spark: SparkSession, store_path: str) -> None:
-    """Delete exactly the delta dirs named by the promoted base's
-    sidecar, then the sidecar itself.  No sidecar → sweep nothing
-    (strictly safe: un-swept folded deltas are shadowed by the reader's
-    delta-over-base rule and re-folded by the next compaction)."""
-    jvm = spark._jvm
-    hpath = jvm.org.apache.hadoop.fs.Path
-    fs = hpath(store_path).getFileSystem(spark._jsc.hadoopConfiguration())
-    side = hpath(f"{store_path}/base/{_FOLDED_SIDECAR}")
-    if not fs.exists(side):
-        return
-    stream = fs.open(side)
-    try:
-        listing = jvm.org.apache.commons.io.IOUtils.toString(
-            stream, "UTF-8"
-        )
-    finally:
-        stream.close()
-    for rel in listing.splitlines():
-        rel = rel.strip()
-        if rel:
-            fs.delete(hpath(f"{store_path}/delta/{rel}"), True)
-    # prune now-empty app=/delta dirs so discovery cost doesn't creep
-    delta = hpath(f"{store_path}/delta")
-    if fs.exists(delta):
-        for app_st in fs.listStatus(delta):
-            if app_st.isDirectory() and not fs.listStatus(app_st.getPath()):
-                fs.delete(app_st.getPath(), True)
-        if not fs.listStatus(delta):
-            fs.delete(delta, True)
-    fs.delete(side, False)
 
 
 def finish_lsh_band_compaction(spark: SparkSession, store_path: str) -> None:
     """Roll the band-store compaction swap forward from ANY crash point
-    (the ``finish_manifest_compaction`` protocol): a complete merged
-    base (``_SUCCESS`` present) under ``__compact_tmp`` is promoted —
-    delete old base, rename tmp, sweep the folded deltas; an incomplete
-    tmp is discarded (the live store was never touched).  Run by every
-    read and every compaction, so no crash strands the store.
-
-    The sweep deletes ONLY the (app, batch) dirs the compaction's
-    sidecar records as actually folded (ADVICE r11): a genuinely NEW
-    batch upserted between the merge-read and the sweep survives to the
-    next compaction instead of being deleted unfolded.  The sidecar
-    rides inside the promoted base, so a crash between rename and sweep
-    resumes here on the next read."""
-    jvm = spark._jvm
-    hpath = jvm.org.apache.hadoop.fs.Path
-    fs = hpath(store_path).getFileSystem(spark._jsc.hadoopConfiguration())
-    tmp = f"{store_path}/base__compact_tmp"
-    if fs.exists(hpath(tmp)):
-        if not fs.exists(hpath(f"{tmp}/_SUCCESS")):
-            fs.delete(hpath(tmp), True)  # merge died mid-write; store intact
-        else:
-            dst = hpath(f"{store_path}/base")
-            fs.delete(dst, True)
-            if not fs.rename(hpath(tmp), dst) and not fs.exists(dst):
-                raise RuntimeError(
-                    "lsh band compaction recovery rename failed"
-                )
-    _sweep_folded_deltas(spark, store_path)
+    and sweep exactly the deltas it folded
+    (``storage.finish_shadowed``).  Run by every read and every
+    compaction, so no crash strands the store."""
+    storage.finish_shadowed(spark, f"{store_path}/base", f"{store_path}/delta")
 
 
 def compact_lsh_bands(spark: SparkSession, store_path: str) -> None:
@@ -1076,46 +976,23 @@ def compact_lsh_bands(spark: SparkSession, store_path: str) -> None:
     distributed parquet dataset partitioned by ``band``, preserving the
     bucket-prune property of the delta layout.  ``app``/``batch`` ride
     along as data columns so the reader's delta-shadows-base rule keeps
-    absorbing post-compaction checkpoint replays.
+    absorbing post-compaction checkpoint replays.  No cut: the tmp
+    write completes (an action) before the swap deletes base or delta,
+    so the merge read never races its own inputs.
 
-    CRASH-SAFE: merged base fully written (+``_SUCCESS``) under
-    ``__compact_tmp`` before the live store is touched;
-    ``finish_lsh_band_compaction`` completes the swap from any crash
-    point.  Single-maintainer contract (don't run concurrently with an
-    active stream's upserts); a replay AFTER compaction re-creates its
-    delta dir, which the reader shadows and the NEXT compaction folds."""
-    from biodiversity_graph_db_spark.streaming.pipeline import _path_exists
-
-    finish_lsh_band_compaction(spark, store_path)  # complete stranded swap
-    if not _path_exists(spark, f"{store_path}/delta"):
-        return
-    # Record the (app, batch) dirs this compaction is about to fold —
-    # the sweep deletes exactly these, so a NEW batch upserted after
-    # this listing (single-maintainer contract notwithstanding) is
-    # never deleted unfolded (ADVICE r11).
-    jvm = spark._jvm
-    hpath = jvm.org.apache.hadoop.fs.Path
-    fs = hpath(store_path).getFileSystem(spark._jsc.hadoopConfiguration())
-    folded = [
-        f"{app.getPath().getName()}/{b.getPath().getName()}"
-        for app in fs.globStatus(hpath(f"{store_path}/delta/app=*"))
-        for b in fs.listStatus(app.getPath())
-        if b.isDirectory()
-    ]
-    # no localCheckpoint: the merge is CORPUS-proportional, and the tmp
-    # write completes (action) before the swap deletes base/delta — the
-    # read never races its own inputs
-    merged = read_lsh_bands(spark, store_path)
-    tmp = f"{store_path}/base__compact_tmp"
-    merged.write.mode("overwrite").partitionBy("band").parquet(tmp)
-    # sidecar AFTER the parquet job: a crash in between promotes a base
-    # with no sidecar, which sweeps nothing — safe (shadowed), unclean
-    out = fs.create(hpath(f"{tmp}/{_FOLDED_SIDECAR}"), True)
-    try:
-        out.write(bytearray("\n".join(folded).encode("utf-8")))
-    finally:
-        out.close()
-    finish_lsh_band_compaction(spark, store_path)
+    CRASH-SAFE and scoped (``storage.compact_shadowed``): a batch
+    upserted during the compaction keeps its delta dir for the next
+    one.  Single-maintainer contract (don't run concurrently with an
+    active stream's upserts, or with reads); a replay AFTER compaction
+    re-creates its delta dir, which the reader shadows and the NEXT
+    compaction folds."""
+    storage.compact_shadowed(
+        spark,
+        f"{store_path}/base",
+        f"{store_path}/delta",
+        _LSH_BANDS_SCHEMA,
+        lambda merged: merged.write.partitionBy("band"),
+    )
 
 
 def run_lsh_bands(doc_stream: DataFrame, store_path: str, checkpoint: str):
@@ -1226,7 +1103,6 @@ def nb_model_upsert(
         nb_doc_counts,
         nb_token_counts,
     )
-    from biodiversity_graph_db_spark.streaming.pipeline import _path_exists
 
     spark = batch.sparkSession
     for sub, fresh, keys in (
@@ -1235,7 +1111,7 @@ def nb_model_upsert(
     ):
         path = f"{out_path}/{sub}"
         merged = fresh
-        if _path_exists(spark, path):
+        if storage.exists(spark, path):
             stored = spark.read.parquet(path)
             if _replayed(stored, batch_id, app_id):
                 continue  # this table already holds the batch
@@ -1503,7 +1379,6 @@ def grid_density_upsert(
     (lineage, batch_id) stamp — grouped sums double-count a replay, so
     an already-applied batch is skipped (``_replayed``)."""
     from biodiversity_graph_db_spark.operators.spatial import GRID_DEG
-    from biodiversity_graph_db_spark.streaming.pipeline import _path_exists
 
     spark = batch.sparkSession
     pts = batch.where(F.col("kind").isin("Site", "SiteDMS"))
@@ -1518,7 +1393,7 @@ def grid_density_upsert(
             F.regexp_extract(F.col("key"), "([0-9]+)$", 1).cast("long")
         ).alias("min_site"),
     )
-    if _path_exists(spark, out_path):
+    if storage.exists(spark, out_path):
         stored = spark.read.parquet(out_path)
         if _replayed(stored, batch_id, app_id):
             return  # replayed batch — its counts are already in

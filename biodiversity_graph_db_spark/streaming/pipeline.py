@@ -28,6 +28,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from biodiversity_graph_db_spark import storage
 from biodiversity_graph_db_spark.extensions.textstats import (
     fingerprint,
     quality_score,
@@ -48,16 +49,6 @@ DOCUMENTS_STREAM_SCHEMA = StructType(
 )
 
 
-def _path_exists(spark: SparkSession, path: str) -> bool:
-    """Backend-agnostic existence check via the Hadoop FileSystem API —
-    correct for local paths, HDFS, and object stores alike (a plain
-    os.path.exists would only cover file://)."""
-    jvm = spark._jvm
-    hpath = jvm.org.apache.hadoop.fs.Path(path)
-    fs = hpath.getFileSystem(spark._jsc.hadoopConfiguration())
-    return bool(fs.exists(hpath))
-
-
 def refresh_bench_grams(bench_docs: DataFrame, path: str) -> None:
     """Rewrite the benchmark gram table a running decontamination
     stream purges against — the REFRESH path for when the benchmark
@@ -68,12 +59,13 @@ def refresh_bench_grams(bench_docs: DataFrame, path: str) -> None:
     at the top of EVERY micro-batch (the gram set is fixed-size, so
     this is one broadcast-sized parquet read per batch), so a swap
     takes effect on the next batch with NO stream restart.  The swap
-    itself is the IVF index's directory-swap: the new gram set is fully
-    written to ``{path}__refresh`` first, then moved into place via
-    delete + atomic rename, so a concurrent batch reads either the old
-    complete set or the new complete set.  Single-maintainer, like
-    every directory-swap in this engine (a metastore/Delta layer is
-    what upgrades it to a real transaction).  Replay idempotence is
+    itself is ``storage.promote``: the new gram set is fully written to
+    ``{path}__refresh`` first, then moved into place by delete + atomic
+    rename.  A batch that reads between the delete and the rename fails
+    with path-not-found (and the stream with it), so run the refresh
+    between batches, not during one: single-maintainer, like every
+    directory swap in this engine (a metastore/Delta layer is what
+    upgrades it to a real transaction).  Replay idempotence is
     untouched: decontamination is stateless per batch, and the sink's
     fingerprint anti-join — not the gram set — is what dedups a
     replayed batch."""
@@ -81,15 +73,9 @@ def refresh_bench_grams(bench_docs: DataFrame, path: str) -> None:
         bench_gram_set,
     )
 
-    spark = bench_docs.sparkSession
     tmp = f"{path}__refresh"
     bench_gram_set(bench_docs).write.mode("overwrite").parquet(tmp)
-    jvm = spark._jvm
-    hpath = jvm.org.apache.hadoop.fs.Path
-    fs = hpath(path).getFileSystem(spark._jsc.hadoopConfiguration())
-    fs.delete(hpath(path), True)
-    if not fs.rename(hpath(tmp), hpath(path)):
-        raise RuntimeError(f"bench gram swap rename failed for {path}")
+    storage.promote(bench_docs.sparkSession, tmp, path)
 
 
 def read_documents_stream(spark: SparkSession, docs_dir: str) -> DataFrame:
@@ -181,7 +167,7 @@ def run_pretraining_ingest(
         # anti-join — a corrupt file, transient FS error, or permission
         # failure must propagate, or replay would silently append
         # duplicates while claiming idempotence.
-        if _path_exists(spark, out_path):
+        if storage.exists(spark, out_path):
             seen = spark.read.parquet(out_path).select("fingerprint")
             fresh = fresh.join(seen, "fingerprint", "left_anti")
         fresh.write.mode("append").partitionBy("split").parquet(out_path)
@@ -265,7 +251,7 @@ def run_pretraining_ingest_neardup(
         bands = cut(doc_bands(fresh))
         ledger_path = f"{out_path}/_bands"
         all_bands = bands
-        if _path_exists(spark, ledger_path):
+        if storage.exists(spark, ledger_path):
             # explicit schema: a survivor-free batch appends zero rows,
             # and schema inference on a part-file-less dir would throw
             all_bands = all_bands.unionByName(
@@ -285,7 +271,7 @@ def run_pretraining_ingest_neardup(
             .distinct()
         )
         fresh = fresh.join(conflicted, "doc_id", "left_anti")
-        if _path_exists(spark, out_path):
+        if storage.exists(spark, out_path):
             seen = spark.read.parquet(out_path).select("fingerprint")
             fresh = fresh.join(seen, "fingerprint", "left_anti")
         fresh.write.mode("append").partitionBy("split").parquet(out_path)
@@ -394,58 +380,37 @@ def run_shard_export(docs_stream: DataFrame, out_dir: str, checkpoint: str):
     )
 
 
+#: the shard manifest's row type, partition columns (app, batch) included
+_MANIFEST_SCHEMA = (
+    "lang string, shard_id long, n_docs long, n_tokens long, n_bytes long,"
+    " min_doc_id long, max_doc_id long, app string, batch long"
+)
+
+
 def read_shard_manifest(spark: SparkSession, out_dir: str) -> DataFrame:
     """The dataloader-facing manifest across every lineage and batch:
     the compacted base (``manifest_base``, one dataset listing) plus any
-    per-batch deltas written since (columns app, batch, lang, shard_id,
-    n_docs, n_tokens, n_bytes, ...).
-
-    DELTA SHADOWS BASE on (app, batch): a batch present in both — a
-    post-compaction checkpoint replay rewrites its delta dir, or a crash
-    between the compaction swap and the delta sweep leaves both copies —
-    is read from the delta only.  The two copies are identical by the
-    idempotent-directory contract, so shadowing makes BOTH races
-    invisible rather than double-counted; this is the replay guard the
-    per-batch layout had, preserved across compaction."""
-    finish_manifest_compaction(spark, out_dir)
-    base_dir = f"{out_dir}/manifest_base"
-    delta_dir = f"{out_dir}/manifest_delta"
-    has_base = _path_exists(spark, base_dir)
-    has_delta = _path_exists(spark, delta_dir)
-    if not has_base:
-        return spark.read.parquet(delta_dir)
-    base = spark.read.parquet(base_dir)
-    if not has_delta:
-        return base
-    delta = spark.read.parquet(delta_dir).select(*base.columns)
-    replayed = delta.select("app", "batch").distinct()
-    return base.join(replayed, ["app", "batch"], "left_anti").unionByName(
-        delta
+    per-batch deltas written since (columns lang, shard_id, n_docs,
+    n_tokens, n_bytes, min_doc_id, max_doc_id, app, batch).  A delta
+    shadows the base on (app, batch) — the replay guard the per-batch
+    layout had, preserved across compaction — and a manifest no batch
+    has written yet reads as zero rows (``storage.read_shadowed``)."""
+    return storage.read_shadowed(
+        spark,
+        f"{out_dir}/manifest_base",
+        f"{out_dir}/manifest_delta",
+        _MANIFEST_SCHEMA,
     )
 
 
 def finish_manifest_compaction(spark: SparkSession, out_dir: str) -> None:
     """Roll the manifest-compaction swap forward from ANY crash point
-    (the versioned-log / ``finish_ivf_compaction`` protocol): a complete
-    merged base (``_SUCCESS`` present) under ``__compact_tmp`` is
-    promoted — delete old base, rename tmp, sweep the folded deltas; an
-    incomplete tmp is discarded (the live manifest was never touched).
-    Run by every read and every compaction, so no crash strands the
+    and sweep the deltas it folded (``storage.finish_shadowed``).  Run
+    by every read and every compaction, so no crash strands the
     manifest."""
-    jvm = spark._jvm
-    hpath = jvm.org.apache.hadoop.fs.Path
-    fs = hpath(out_dir).getFileSystem(spark._jsc.hadoopConfiguration())
-    tmp = f"{out_dir}/manifest_base__compact_tmp"
-    if not fs.exists(hpath(tmp)):
-        return
-    if not fs.exists(hpath(f"{tmp}/_SUCCESS")):
-        fs.delete(hpath(tmp), True)  # merge died mid-write; manifest intact
-        return
-    dst = hpath(f"{out_dir}/manifest_base")
-    fs.delete(dst, True)
-    if not fs.rename(hpath(tmp), dst) and not fs.exists(dst):
-        raise RuntimeError("manifest compaction recovery rename failed")
-    fs.delete(hpath(f"{out_dir}/manifest_delta"), True)
+    storage.finish_shadowed(
+        spark, f"{out_dir}/manifest_base", f"{out_dir}/manifest_delta"
+    )
 
 
 def compact_shard_manifests(spark: SparkSession, out_dir: str) -> None:
@@ -460,19 +425,19 @@ def compact_shard_manifests(spark: SparkSession, out_dir: str) -> None:
     never by listing ``shards_delta``, so manifest compaction alone
     restores O(1) discovery.
 
-    CRASH-SAFE: merged base fully written (+``_SUCCESS``) under
-    ``__compact_tmp`` before the live manifest is touched;
-    ``finish_manifest_compaction`` completes the swap from any crash
-    point.  Single-maintainer contract as the IVF twin (don't run
-    concurrently with an active stream's upserts); a checkpoint replay
-    AFTER compaction re-creates its delta dir, which the reader's
+    CRASH-SAFE and scoped like every shadowed-store compaction
+    (``storage.compact_shadowed``): a batch upserted during the
+    compaction keeps its delta dir for the next one.  Single-maintainer
+    contract as the IVF twin (don't run concurrently with an active
+    stream's upserts, or with reads); a checkpoint replay AFTER
+    compaction re-creates its delta dir, which the reader's
     delta-shadows-base rule absorbs and the NEXT compaction folds."""
-    finish_manifest_compaction(spark, out_dir)  # complete any stranded swap
-    if not _path_exists(spark, f"{out_dir}/manifest_delta"):
-        return
-    merged = cut(read_shard_manifest(spark, out_dir))
-    tmp = f"{out_dir}/manifest_base__compact_tmp"
-    # one row per (app, batch, lang, shard): driver/broadcast-scale by
-    # construction, so a single output file is the right layout
-    merged.coalesce(1).write.mode("overwrite").parquet(tmp)
-    finish_manifest_compaction(spark, out_dir)
+    storage.compact_shadowed(
+        spark,
+        f"{out_dir}/manifest_base",
+        f"{out_dir}/manifest_delta",
+        _MANIFEST_SCHEMA,
+        # one row per (app, batch, lang, shard): driver/broadcast-scale
+        # by construction, so a single output file is the right layout
+        lambda merged: cut(merged).coalesce(1).write,
+    )

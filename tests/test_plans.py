@@ -2124,3 +2124,42 @@ class TestOneCutPrimitive:
             spark.conf.unset("spark.graft.cuts.dir")
         assert got == want
         assert new, "no cut of this query reached the checkpoint dir"
+
+
+class TestOneStorageModule:
+    """``storage.py`` is the package's only Hadoop FileSystem client, so
+    every directory swap, publish, marker and sidecar shares one
+    roll-forward, one rename and one text read/write pair."""
+
+    def test_no_hadoop_fs_use_outside_storage(self):
+        """Any ``hadoop.fs.Path`` construction or ``getFileSystem`` /
+        ``hadoopConfiguration`` call outside ``storage.py`` would be a
+        hand-written copy of a storage protocol.  The scan walks the AST,
+        so comments and docstrings naming them do not count."""
+        import ast
+        import pathlib
+
+        import biodiversity_graph_db_spark as pkg
+
+        root = pathlib.Path(pkg.__file__).parent
+        owner = root / "storage.py"
+
+        def is_fs_use(node) -> bool:
+            if not isinstance(node, ast.Attribute):
+                return False
+            if node.attr in ("getFileSystem", "hadoopConfiguration"):
+                return True
+            chain = []  # hadoop.fs.Path, innermost attribute last
+            while isinstance(node, ast.Attribute) and len(chain) < 3:
+                chain.append(node.attr)
+                node = node.value
+            return chain == ["Path", "fs", "hadoop"]
+
+        raw = [
+            f"{path.relative_to(root)}:{node.lineno}"
+            for path in sorted(root.rglob("*.py"))
+            if path != owner
+            for node in ast.walk(ast.parse(path.read_text(), str(path)))
+            if is_fs_use(node)
+        ]
+        assert raw == []

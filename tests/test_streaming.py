@@ -1590,6 +1590,7 @@ class TestStreamingShardExport:
         import shutil
         import tempfile
 
+        from biodiversity_graph_db_spark import storage
         from biodiversity_graph_db_spark.streaming import pipeline
         from biodiversity_graph_db_spark.tables import table
 
@@ -1617,8 +1618,8 @@ class TestStreamingShardExport:
             # (a)+(b) equivalence and single-dataset layout
             pipeline.compact_shard_manifests(spark, out)
             assert rows(pipeline.read_shard_manifest(spark, out)) == before
-            assert not pipeline._path_exists(spark, f"{out}/manifest_delta")
-            assert pipeline._path_exists(spark, f"{out}/manifest_base")
+            assert not storage.exists(spark, f"{out}/manifest_delta")
+            assert storage.exists(spark, f"{out}/manifest_base")
 
             # idempotent on an already-compacted manifest
             pipeline.compact_shard_manifests(spark, out)
@@ -1631,7 +1632,7 @@ class TestStreamingShardExport:
             assert rows(pipeline.read_shard_manifest(spark, out)) == before
             pipeline.compact_shard_manifests(spark, out)
             assert rows(pipeline.read_shard_manifest(spark, out)) == before
-            assert not pipeline._path_exists(spark, f"{out}/manifest_delta")
+            assert not storage.exists(spark, f"{out}/manifest_delta")
 
             # a genuinely NEW batch after compaction merges in
             pipeline.shard_export_upsert(batches[2], 9, out, app_id="appB")
@@ -1648,7 +1649,7 @@ class TestStreamingShardExport:
             with open(f"{bad}/part-junk.parquet", "w") as f:
                 f.write("torn")
             assert rows(pipeline.read_shard_manifest(spark, out)) == grown
-            assert not pipeline._path_exists(spark, bad)
+            assert not storage.exists(spark, bad)
 
             # (e) completed-but-unswapped tmp: move the live base into
             # tmp position (it carries _SUCCESS from its parquet write)
@@ -1656,8 +1657,8 @@ class TestStreamingShardExport:
             # and the reader-side heal promotes it
             shutil.move(f"{out}/manifest_base", bad)
             assert rows(pipeline.read_shard_manifest(spark, out)) == grown
-            assert pipeline._path_exists(spark, f"{out}/manifest_base")
-            assert not pipeline._path_exists(spark, bad)
+            assert storage.exists(spark, f"{out}/manifest_base")
+            assert not storage.exists(spark, bad)
         finally:
             shutil.rmtree(tmp, ignore_errors=True)
 
@@ -1870,8 +1871,8 @@ class TestLshBandStore:
         import shutil
         import tempfile
 
+        from biodiversity_graph_db_spark import storage
         from biodiversity_graph_db_spark.streaming import ingest
-        from biodiversity_graph_db_spark.streaming.pipeline import _path_exists
         from biodiversity_graph_db_spark.tables import table
 
         docs = (
@@ -1903,8 +1904,8 @@ class TestLshBandStore:
             # (a)+(b) equivalence and single-dataset band-partitioned base
             ingest.compact_lsh_bands(spark, store)
             assert rows(ingest.read_lsh_bands(spark, store)) == before
-            assert not _path_exists(spark, f"{store}/delta")
-            assert _path_exists(spark, f"{store}/base")
+            assert not storage.exists(spark, f"{store}/delta")
+            assert storage.exists(spark, f"{store}/base")
             assert any(
                 d.startswith("band=") for d in os.listdir(f"{store}/base")
             )
@@ -1917,11 +1918,11 @@ class TestLshBandStore:
             # reappears beside its folded base copy — shadowed, and the
             # next compaction folds it away again
             ingest.lsh_band_upsert(batches[1], 1, store, app_id="appA")
-            assert _path_exists(spark, f"{store}/delta")
+            assert storage.exists(spark, f"{store}/delta")
             assert rows(ingest.read_lsh_bands(spark, store)) == before
             ingest.compact_lsh_bands(spark, store)
             assert rows(ingest.read_lsh_bands(spark, store)) == before
-            assert not _path_exists(spark, f"{store}/delta")
+            assert not storage.exists(spark, f"{store}/delta")
 
             # a genuinely NEW batch after compaction merges in
             ingest.lsh_band_upsert(batches[2], 9, store, app_id="appB")
@@ -1936,7 +1937,7 @@ class TestLshBandStore:
             with open(f"{bad}/part-junk.parquet", "w") as f:
                 f.write("torn")
             assert rows(ingest.read_lsh_bands(spark, store)) == grown
-            assert not _path_exists(spark, bad)
+            assert not storage.exists(spark, bad)
 
             # (e) completed-but-unswapped tmp: move the live base into
             # tmp position (it carries _SUCCESS from its parquet write)
@@ -1944,25 +1945,62 @@ class TestLshBandStore:
             # and the reader-side heal promotes it
             shutil.move(f"{store}/base", bad)
             assert rows(ingest.read_lsh_bands(spark, store)) == grown
-            assert _path_exists(spark, f"{store}/base")
-            assert not _path_exists(spark, bad)
+            assert storage.exists(spark, f"{store}/base")
+            assert not storage.exists(spark, bad)
         finally:
             shutil.rmtree(tmp, ignore_errors=True)
 
 
-    def test_read_untouched_store_is_empty_not_error(self, spark, tmp_path):
-        """A reader pointed at a store path no upsert has touched yet
-        gets an EMPTY five-column frame, not a parquet path-not-found
-        AnalysisException (ADVICE r11) — read_lsh_bands is the store's
-        public reader and must be total."""
-        from biodiversity_graph_db_spark.streaming import ingest
+def _shadowed_store(kind: str):
+    """(upsert, read, compact, delta dir name) of one of the two
+    ``base/`` + ``delta/app=*/batch=*`` stores that share
+    ``storage.read_shadowed`` / ``compact_shadowed``."""
+    from biodiversity_graph_db_spark.streaming import ingest, pipeline
 
-        out = ingest.read_lsh_bands(spark, str(tmp_path / "never_written"))
-        assert out.columns == ["doc_id", "band_key", "app", "batch", "band"]
+    if kind == "lsh":
+        return (
+            ingest.lsh_band_upsert,
+            ingest.read_lsh_bands,
+            ingest.compact_lsh_bands,
+            "delta",
+        )
+    return (
+        pipeline.shard_export_upsert,
+        pipeline.read_shard_manifest,
+        pipeline.compact_shard_manifests,
+        "manifest_delta",
+    )
+
+
+@pytest.mark.parametrize("kind", ["lsh", "manifest"])
+class TestShadowedDeltaStore:
+    def test_read_untouched_store_is_empty_not_error(
+        self, spark, tmp_path, kind
+    ):
+        """A reader pointed at a store path no upsert has touched yet
+        gets an EMPTY frame with the populated reads' columns, not a
+        parquet path-not-found AnalysisException (ADVICE r11) — the
+        store's public reader must be total."""
+        _, read, _, _ = _shadowed_store(kind)
+        out = read(spark, str(tmp_path / "never_written"))
+        assert out.columns == {
+            "lsh": ["doc_id", "band_key", "app", "batch", "band"],
+            "manifest": [
+                "lang",
+                "shard_id",
+                "n_docs",
+                "n_tokens",
+                "n_bytes",
+                "min_doc_id",
+                "max_doc_id",
+                "app",
+                "batch",
+            ],
+        }[kind]
         assert out.count() == 0
 
     def test_concurrent_new_batch_survives_sweep(
-        self, spark, sf_dir, monkeypatch
+        self, spark, sf_dir, monkeypatch, kind
     ):
         """The sweep deletes ONLY the delta dirs the compaction's
         sidecar records as folded (ADVICE r11): a new batch upserted
@@ -1973,21 +2011,22 @@ class TestLshBandStore:
         import shutil
         import tempfile
 
-        from biodiversity_graph_db_spark.streaming import ingest
+        from biodiversity_graph_db_spark import storage
         from biodiversity_graph_db_spark.tables import table
 
+        upsert, read, compact, delta_name = _shadowed_store(kind)
         docs = (
             table(spark, sf_dir, "documents")
             .where(F.col("doc_id") < 40)
-            .select("doc_id", "text")
             .localCheckpoint()
         )
         early = docs.where(F.col("doc_id") % 2 == 0).localCheckpoint()
         late = docs.where(F.col("doc_id") % 2 == 1).localCheckpoint()
-        tmp = tempfile.mkdtemp(prefix="lsh_store_race_")
+        tmp = tempfile.mkdtemp(prefix=f"{kind}_store_race_")
         store = f"{tmp}/store"
+        delta = f"{store}/{delta_name}"
         try:
-            ingest.lsh_band_upsert(early, 0, store, app_id="appA")
+            upsert(early, 0, store, app_id="appA")
 
             def rows(df):
                 cols = sorted(df.columns)
@@ -1996,42 +2035,42 @@ class TestLshBandStore:
                     for r in df.select(*cols).collect()
                 )
 
-            want_early = rows(ingest.read_lsh_bands(spark, store))
+            want_early = rows(read(spark, store))
 
             # inject the racing upsert AFTER compact's fold listing but
-            # BEFORE its merge-read (the widest destruction window the
-            # old whole-tree sweep had)
-            real_read = ingest.read_lsh_bands
+            # BEFORE its merge-read (the widest destruction window a
+            # whole-tree sweep has)
+            real_read = storage.read_shadowed
             injected = {"done": False}
 
-            def read_with_race(s, path):
+            def read_with_race(*args):
                 if not injected["done"]:
                     injected["done"] = True
-                    ingest.lsh_band_upsert(late, 7, store, app_id="appB")
-                return real_read(s, path)
+                    upsert(late, 7, store, app_id="appB")
+                return real_read(*args)
 
-            monkeypatch.setattr(ingest, "read_lsh_bands", read_with_race)
-            ingest.compact_lsh_bands(spark, store)
-            monkeypatch.setattr(ingest, "read_lsh_bands", real_read)
+            monkeypatch.setattr(storage, "read_shadowed", read_with_race)
+            compact(spark, store)
+            monkeypatch.setattr(storage, "read_shadowed", real_read)
 
             # the racing batch's delta dir survived the sweep …
-            assert os.path.isdir(f"{store}/delta")
+            assert os.path.isdir(delta)
             surviving = [
                 f"{a}/{b}"
-                for a in os.listdir(f"{store}/delta")
-                for b in os.listdir(f"{store}/delta/{a}")
+                for a in os.listdir(delta)
+                for b in os.listdir(f"{delta}/{a}")
             ]
             assert any("batch=7" in d for d in surviving)
             # … and every row (early + late, each exactly once) is
             # visible — expected built from an independent scratch store
-            ingest.lsh_band_upsert(late, 7, f"{tmp}/scratch", app_id="appB")
-            want_late = rows(real_read(spark, f"{tmp}/scratch"))
-            got = rows(real_read(spark, store))
+            upsert(late, 7, f"{tmp}/scratch", app_id="appB")
+            want_late = rows(read(spark, f"{tmp}/scratch"))
+            got = rows(read(spark, store))
             assert got == sorted(want_early + want_late)
             # the next compaction folds it in and the store stays equal
-            ingest.compact_lsh_bands(spark, store)
-            assert rows(real_read(spark, store)) == got
-            assert not os.path.isdir(f"{store}/delta")
+            compact(spark, store)
+            assert rows(read(spark, store)) == got
+            assert not os.path.isdir(delta)
         finally:
             shutil.rmtree(tmp, ignore_errors=True)
 
