@@ -36,15 +36,21 @@ from biodiversity_graph_db_spark.operators._util import (
 RANK_UNIT = 1_000_000  # PageRank fixed-point micro-units
 
 
-def _derived_partitions(df: DataFrame, rows_per_partition: int = 50_000) -> int:
+def _derived_partitions(
+    df: DataFrame, rows: int | None = None, rows_per_partition: int = 50_000
+) -> int:
     """~1 partition per ``rows_per_partition`` rows, capped by the
     session's shuffle parallelism — the loop-partitioning rule pagerank
     documented (tiny graphs must not fan out to the session default;
-    100 TB graphs saturate the ceiling).  Counting materializes the
-    caller's cache, which every iterative caller wants anyway.  The
-    loop then runs inside ``partition_scope`` at this count."""
+    100 TB graphs saturate the ceiling).  ``rows`` is ``df``'s row count
+    when the caller already has it; otherwise it is counted here, which
+    materializes the caller's cache (every iterative caller wants that
+    anyway).  The loop then runs inside ``partition_scope`` at this
+    count."""
+    if rows is None:
+        rows = df.count()
     ceiling = shuffle_ceiling(df.sparkSession)
-    return max(1, min(ceiling, df.count() // rows_per_partition + 1))
+    return max(1, min(ceiling, rows // rows_per_partition + 1))
 
 
 def _pairs(edges: DataFrame) -> DataFrame:
@@ -56,11 +62,35 @@ def _pairs(edges: DataFrame) -> DataFrame:
 
 
 def undirect(edges: DataFrame) -> DataFrame:
-    """Symmetric closure of the edge set (for undirected algorithms)."""
-    p = _pairs(edges)
+    """Symmetric closure of the edge set (for undirected algorithms):
+    both orientations of every non-loop edge, one scan and one dedup.
+    Self-loops and edges with a NULL endpoint are dropped."""
+    a, b = edges.columns[:2]
     return (
-        p.unionByName(p.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
-        .where(F.col("src") != F.col("dst"))
+        edges.where(F.col(a) != F.col(b))
+        .select(
+            F.inline(
+                F.array(
+                    F.struct(F.col(a).alias("src"), F.col(b).alias("dst")),
+                    F.struct(F.col(b).alias("src"), F.col(a).alias("dst")),
+                )
+            )
+        )
+        .dropDuplicates()
+    )
+
+
+def canonical(edges: DataFrame) -> DataFrame:
+    """The undirected simple graph as its canonical oriented edge set
+    (a, b) with a < b: one row per undirected edge, one dedup.
+    Self-loops and edges with a NULL endpoint are dropped."""
+    x, y = edges.columns[:2]
+    return (
+        edges.where(F.col(x) != F.col(y))
+        .select(
+            F.least(x, y).alias("a"),
+            F.greatest(x, y).alias("b"),
+        )
         .dropDuplicates()
     )
 
@@ -101,8 +131,17 @@ def pagerank(
     the final round never checkpoints (the caller's action materializes
     it)."""
     e = _pairs(edges).cache()
+    m = e.count()
+    if m == 0:
+        # no vertices, no ranks (and no 1/n teleport base) — zero rows,
+        # as label_propagation and connected_components return; the
+        # empty plan runs no job
+        e.unpersist()
+        return e.select(
+            F.col("src").alias("key"), F.lit(0).cast("long").alias("rank_micro")
+        ).limit(0)
     if partitions is None:
-        partitions = _derived_partitions(e)
+        partitions = _derived_partitions(e, m)
     # plan AND execute the whole loop at the derived count
     # (partition_scope): the per-iteration contrib aggregation then
     # shuffles straight onto nodes'/out's partitioning — one Exchange
@@ -120,10 +159,6 @@ def pagerank(
             .cache()
         )
         n = nodes.count()
-        if n == 0:
-            # no vertices, no ranks (and no 1/n teleport base) — zero
-            # rows, as label_propagation and connected_components return
-            return nodes.select("key", F.lit(0).cast("long").alias("rank_micro"))
         d_pct = int(round(damping * 100))
         base = int((RANK_UNIT * (100 - d_pct)) // (100 * n))
         deg = e.groupBy("src").agg(F.count("*").alias("deg"))
@@ -179,22 +214,25 @@ def triangle_count(edges: DataFrame) -> DataFrame:
     exactly once, then credited to its three vertices.  The oriented
     self-join is the standard bound on fan-out (no vertex pairs twice).
     """
-    und = undirect(edges)
-    ord_e = und.where(F.col("src") < F.col("dst")).cache()
-    e1 = ord_e.select(F.col("src").alias("a"), F.col("dst").alias("b"))
-    e2 = ord_e.select(F.col("src").alias("b2"), F.col("dst").alias("c"))
-    e3 = ord_e.select(F.col("src").alias("a3"), F.col("dst").alias("c3"))
+    return _triangles(canonical(edges))
+
+
+def _triangles(und: DataFrame) -> DataFrame:
+    """(key, triangles) over a ``canonical`` edge set.  The three edge
+    roles read one uncached plan, so AQE reuses its dedup Exchange
+    instead of re-running the scan below it."""
+    e2 = und.select(F.col("a").alias("b2"), F.col("b").alias("c"))
+    e3 = und.select(F.col("a").alias("a3"), F.col("b").alias("c3"))
     tris = (
-        e1.join(e2, F.col("b") == F.col("b2"))
+        und.join(e2, F.col("b") == F.col("b2"))
         .join(e3, (F.col("a") == F.col("a3")) & (F.col("c") == F.col("c3")))
         .select("a", "b", "c")
     )
-    per_vertex = (
+    return (
         tris.select(F.explode(F.array("a", "b", "c")).alias("key"))
         .groupBy("key")
         .agg(F.count("*").alias("triangles"))
     )
-    return per_vertex
 
 
 def shortest_paths(
@@ -259,14 +297,14 @@ def label_propagation(edges: DataFrame, max_iter: int = 5) -> DataFrame:
     included — the cache dedups execution but not plan processing).  The
     eager per-round ``localCheckpoint`` IS the optimum here: 5 tiny
     actions, linear plans, ~2.0 s."""
-    und = undirect(edges).cache()
+    sym = undirect(edges).cache()
     # loop-scoped partitioning (r13, see partition_scope): LPA's rounds
     # are eager (per-round localCheckpoint), so every vote/argmax/carry
     # shuffle planned inside the scope lands at the derived count
     # instead of fanning a tiny graph out to the session default
-    partitions = _derived_partitions(und)
-    with partition_scope(und.sparkSession, partitions):
-        und = und.repartition(partitions, "dst").cache()
+    partitions = _derived_partitions(sym)
+    with partition_scope(sym.sparkSession, partitions):
+        und = sym.repartition(partitions, "dst").cache()
         labels = (
             und.select(F.col("src").alias("key"))
             .dropDuplicates()
@@ -303,6 +341,9 @@ def label_propagation(edges: DataFrame, max_iter: int = 5) -> DataFrame:
                 .select("key", F.coalesce("new_label", "label").alias("label"))
                 .transform(cut)
             )
+    # every round's labels are a cut, so the caches can go
+    und.unpersist()
+    sym.unpersist()
     return labels
 
 
@@ -647,17 +688,9 @@ def modularity(edges: DataFrame, labels: DataFrame) -> DataFrame:
     labels side is the vertex table — orders of magnitude smaller than
     edges; AQE broadcasts it when it fits), and two bounded
     per-community aggregates.  m travels as a broadcast 1-row literal,
-    never a driver-side collect."""
-    a, b = edges.columns[:2]
-    canon = (
-        edges.select(
-            F.least(F.col(a), F.col(b)).alias("a"),
-            F.greatest(F.col(a), F.col(b)).alias("b"),
-        )
-        .where(F.col("a") != F.col("b"))
-        .dropDuplicates()
-        .cache()
-    )
+    never a driver-side collect.  The canonical set is not cached: its
+    three consumers read one plan, so AQE reuses its dedup Exchange."""
+    canon = canonical(edges)
     mrow = canon.agg(F.count(F.lit(1)).alias("m"))
     deg = (
         canon.select(F.col("a").alias("key"))
@@ -746,16 +779,19 @@ def clustering_coefficient(edges: DataFrame) -> DataFrame:
     vertices (lcc→0) from clique members (lcc→1).
 
     Cost is the triangle enumeration (``triangle_count``'s oriented
-    wedge join) plus ONE combinable degree count on the symmetric edge
-    set — no new join shape; vertices with deg < 2 are excluded (the
+    wedge join) plus ONE combinable degree count over both endpoints of
+    the same canonical edge set — one scan and one dedup feed both, no
+    new join shape; vertices with deg < 2 are excluded (the
     coefficient is undefined there).  The division is a single IEEE
     double op on two exact integers, so floor-quantized output is
     bit-identical cross-engine."""
-    und = undirect(edges)
-    deg = und.groupBy(F.col("src").alias("key")).agg(
-        F.count("*").alias("deg")
+    und = canonical(edges)
+    deg = (
+        und.select(F.explode(F.array("a", "b")).alias("key"))
+        .groupBy("key")
+        .agg(F.count("*").alias("deg"))
     )
-    tri = triangle_count(edges)
+    tri = _triangles(und)
     lcc = (F.lit(2.0) * F.coalesce(F.col("triangles"), F.lit(0))) / (
         F.col("deg") * (F.col("deg") - F.lit(1))
     )

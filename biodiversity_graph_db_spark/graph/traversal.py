@@ -21,7 +21,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from biodiversity_graph_db_spark.operators._util import cut
+from biodiversity_graph_db_spark.graph.algorithms import _derived_partitions
+from biodiversity_graph_db_spark.operators._util import cut, partition_scope
 
 
 def out_hop(edges: DataFrame, relation: str | None = None) -> DataFrame:
@@ -149,49 +150,87 @@ def bfs(edges: DataFrame, start_key: str, max_hops: int = 10) -> DataFrame:
 def connected_components(edges: DataFrame, max_iter: int = 20) -> DataFrame:
     """Component/orphan audit (§2.12, e.g. HasOrphanProxy): hash-min label
     propagation over the undirected edge set; component id = min key (as
-    string) reachable.  Returns (key, component)."""
+    string) reachable, after at most ``max_iter`` rounds (at least one).
+    Returns (key, component).
+
+    Every non-NULL endpoint is a vertex, so a vertex whose only edge is a
+    self-loop is its own component.  The loop is planned and run inside
+    ``partition_scope`` at the graph's derived count, with the static
+    symmetric edge set cached hash-partitioned on its join key (the
+    pagerank/label_propagation discipline): each round then runs its
+    message shuffle at the graph's size, not the session default.
+
+    Round 1 needs no join (every label is still its own key, so a
+    vertex's neighbour minimum is one aggregate over the edge set); each
+    later round is one join plus one aggregate over the neighbours'
+    labels and the vertex's own."""
+    spark = edges.sparkSession
     und = (
         edges.select(
-            F.col("source_key").alias("a"), F.col("sink_key").alias("b")
-        )
-        .unionByName(
-            edges.select(
-                F.col("sink_key").alias("a"), F.col("source_key").alias("b")
+            F.inline(
+                F.array(
+                    F.struct(
+                        F.col("source_key").alias("a"), F.col("sink_key").alias("b")
+                    ),
+                    F.struct(
+                        F.col("sink_key").alias("a"), F.col("source_key").alias("b")
+                    ),
+                )
             )
         )
-        .dropDuplicates()
+        .where(F.col("a").isNotNull())
         .cache()
     )
-    labels = (
-        und.select(F.col("a").alias("key"))
-        .dropDuplicates()
-        .withColumn("component", F.col("key"))
-    )
-    for _ in range(max_iter):
-        neighbor_min = (
-            und.join(labels, und.b == labels.key)
-            .groupBy(und.a)
-            .agg(F.min("component").alias("nbr_min"))
-            .withColumnRenamed("a", "key")
-        )
+    partitions = _derived_partitions(und)
+    with partition_scope(spark, partitions):
+        # hashed on b, the dedup on (a, b) needs no second Exchange
+        static = und.repartition(partitions, "b").dropDuplicates().cache()
         # carry the changed flag through the checkpoint so the fixpoint
         # test reads the materialized rows instead of re-running the
-        # join+agg (checkpoint-then-probe was recomputing every round)
-        new_labels = (
-            labels.join(neighbor_min, "key", "left")
+        # round (checkpoint-then-probe was recomputing every round)
+        rnd = (
+            static.groupBy(F.col("a").alias("key"))
+            .agg(F.min("b").alias("nbr_min"))
             .select(
                 "key",
-                F.least(
-                    F.col("component"), F.coalesce("nbr_min", F.col("component"))
-                ).alias("component"),
-                (
-                    F.coalesce("nbr_min", F.col("component"))
-                    < F.col("component")
-                ).alias("changed"),
+                F.least("key", "nbr_min").alias("component"),  # skips NULL
+                (F.col("nbr_min") < F.col("key")).alias("changed"),
             )
             .transform(cut)
         )
-        labels = new_labels.select("key", "component")
-        if new_labels.where("changed").limit(1).isEmpty():
-            break
-    return labels
+        for _ in range(max_iter - 1):
+            if rnd.where("changed").limit(1).isEmpty():
+                break
+            labels = rnd.select("key", "component")
+            # ambiguity-safe rename (the pagerank-loop fix)
+            lab = labels.select(
+                F.col("key").alias("_l_key"), F.col("component").alias("_l_c")
+            )
+            msgs = (
+                static.join(lab, F.col("b") == F.col("_l_key"))
+                .select(
+                    F.col("a").alias("key"),
+                    F.col("_l_c").alias("c"),
+                    F.lit(False).alias("own"),
+                )
+                .unionByName(
+                    labels.select(
+                        "key", F.col("component").alias("c"), F.lit(True).alias("own")
+                    )
+                )
+            )
+            rnd = (
+                msgs.groupBy("key")
+                .agg(
+                    F.min("c").alias("component"),
+                    F.max(F.when(F.col("own"), F.col("c"))).alias("old"),
+                )
+                .select(
+                    "key", "component", (F.col("component") < F.col("old")).alias("changed")
+                )
+                .transform(cut)
+            )
+    # every round's labels are a cut, so the caches can go
+    static.unpersist()
+    und.unpersist()
+    return rnd.select("key", "component")

@@ -16,12 +16,15 @@ would widen the accumulator to DECIMAL(38,0) — same shape, wider type.
 
 from __future__ import annotations
 
+import threading
 from contextlib import contextmanager
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 SCALE = 10_000  # 4 fractional digits
+
+_SCOPE_LOCK = threading.RLock()  # serializes partition_scope bodies
 
 
 def _c(col: Column | str) -> Column:
@@ -212,14 +215,19 @@ def partition_scope(spark, n: int):
     - canned streaming drains: the state partition count is locked in
       at stream start.
 
-    Serial-harness assumption: a concurrently planned query in the same
-    session would pick up the scoped value."""
-    old = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(n))
-    try:
-        yield
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old)
+    Scopes are serialized by one re-entrant lock: a thread entering a
+    scope waits until another thread's scope has restored its value
+    (nested scopes in one thread are fine).  Unlocked, two threads'
+    interleaved save/set/restore would leave the session at the wrong
+    count for good.  A query planned by a thread that holds no scope still
+    picks up a scoped value while one is open."""
+    with _SCOPE_LOCK:
+        old = spark.conf.get("spark.sql.shuffle.partitions")
+        spark.conf.set("spark.sql.shuffle.partitions", str(n))
+        try:
+            yield
+        finally:
+            spark.conf.set("spark.sql.shuffle.partitions", old)
 
 
 def plan_bytes(df) -> int:

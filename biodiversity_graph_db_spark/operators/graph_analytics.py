@@ -61,20 +61,22 @@ def li_graph(
     links its order, part and supplier pairwise (a tripartite graph with
     a triangle per lineitem row).  ``bound`` defaults to the oracle's
     fixed slice; scale experiments raise it to grow the graph with SF."""
-    li = (
+    o = F.concat(F.lit("o_"), F.col("l_orderkey"))
+    p = F.concat(F.lit("p_"), F.col("l_partkey"))
+    s = F.concat(F.lit("s_"), F.col("l_suppkey"))
+    # one scan, the row's three pairs exploded in place, one dedup
+    return (
         table(spark, sf_dir, "lineitem")
         .where(F.col("l_orderkey") <= bound)
         .select(
-            F.concat(F.lit("o_"), F.col("l_orderkey")).alias("o"),
-            F.concat(F.lit("p_"), F.col("l_partkey")).alias("p"),
-            F.concat(F.lit("s_"), F.col("l_suppkey")).alias("s"),
+            F.inline(
+                F.array(
+                    F.struct(o.alias("src"), p.alias("dst")),
+                    F.struct(o.alias("src"), s.alias("dst")),
+                    F.struct(p.alias("src"), s.alias("dst")),
+                )
+            )
         )
-        .dropDuplicates()
-    )
-    return (
-        li.select(F.col("o").alias("src"), F.col("p").alias("dst"))
-        .unionByName(li.select(F.col("o").alias("src"), F.col("s").alias("dst")))
-        .unionByName(li.select(F.col("p").alias("src"), F.col("s").alias("dst")))
         .dropDuplicates()
     )
 
@@ -385,15 +387,7 @@ def g11_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
     test) — the density filter that strips pendant vertices before
     community/triangle analytics, completing the classic GraphX set
     (CC, PageRank, triangles, BFS, LPA, motif, k-core)."""
-    und = (
-        li_graph(spark, sf_dir)
-        .select(
-            F.least("src", "dst").alias("a"),
-            F.greatest("src", "dst").alias("b"),
-        )
-        .dropDuplicates()
-    )
-    return kcore_peel(und).orderBy("v")
+    return kcore_peel(algorithms.canonical(li_graph(spark, sf_dir))).orderBy("v")
 
 
 # --- G12: strongly connected components -----------------------------------
@@ -783,7 +777,8 @@ def g17_clustering_coeff(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: the wedge join is the G5 oriented self-join (the
     standard fan-out bound); the degree count is one map-side-combinable
-    aggregate on the symmetric edge set; the final join is vertex-keyed.
+    aggregate over both endpoints of the same canonical edge set; the
+    final join is vertex-keyed.
     The lcc division runs on two exact BIGINTs, so the floor-quantized
     double is bit-identical in DuckDB."""
     return algorithms.clustering_coefficient(li_graph(spark, sf_dir)).orderBy(

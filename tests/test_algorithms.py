@@ -3,10 +3,12 @@ graph/motif.py) on small hand-built graphs with known answers."""
 
 from __future__ import annotations
 
+import math
+
 import pytest
 from pyspark.sql import functions as F
 
-from biodiversity_graph_db_spark.graph import algorithms, motif
+from biodiversity_graph_db_spark.graph import algorithms, motif, traversal
 from biodiversity_graph_db_spark.operators._util import partition_scope
 
 
@@ -515,3 +517,143 @@ class TestShuffleScope:
                 assert spark.conf.get(key) == str(scoped)
                 raise RuntimeError("loop failed")
         assert spark.conf.get(key) == before
+
+    def test_overlapping_scopes_in_two_threads_restore_session_value(
+        self, spark
+    ):
+        """A enters a scope, B tries to enter one while A is inside, A
+        leaves before B does.  Unlocked, B saves A's scoped value and
+        restores it last, so the session keeps it for good; the scope
+        lock makes B wait until A has restored the caller's value."""
+        import threading
+
+        key = "spark.sql.shuffle.partitions"
+        before = spark.conf.get(key)
+        a_in, b_entering, b_in, a_out = (threading.Event() for _ in range(4))
+        seen = {}
+
+        def thread_a():
+            with partition_scope(spark, int(before) + 1):
+                a_in.set()
+                b_entering.wait(10)
+                # B is inside by now unless the lock holds it back
+                b_in.wait(1)
+            a_out.set()
+
+        def thread_b():
+            a_in.wait(10)
+            b_entering.set()
+            with partition_scope(spark, int(before) + 2):
+                b_in.set()
+                seen["b"] = spark.conf.get(key)
+                a_out.wait(10)
+
+        threads = [threading.Thread(target=f) for f in (thread_a, thread_b)]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(30)
+        assert seen["b"] == str(int(before) + 2)
+        assert spark.conf.get(key) == before
+
+
+# ---- degenerate edge sets against a plain-Python model ------------------
+
+DEGENERATE_EDGE_SETS = {
+    "empty": [],
+    "self_loops_only": [("a", "a"), ("b", "b")],
+    "duplicated": [("a", "b"), ("a", "b"), ("b", "c"), ("b", "c"), ("a", "c")],
+    "reversed": [("a", "b"), ("b", "a"), ("c", "b"), ("a", "c"), ("c", "a")],
+    "null_endpoints": [
+        ("a", None), (None, "b"), (None, None), ("a", "b"), ("b", "c"),
+        ("c", "a"), ("d", None),
+    ],
+    "self_loop_vertex_beside_triangle": [
+        ("a", "b"), ("b", "c"), ("c", "a"), ("c", "d"), ("z", "z"),
+    ],
+}
+
+
+def _model_canonical(pairs):
+    return {
+        (min(x, y), max(x, y))
+        for x, y in pairs
+        if x is not None and y is not None and x != y
+    }
+
+
+def _model_undirect(pairs):
+    return {o for a, b in _model_canonical(pairs) for o in ((a, b), (b, a))}
+
+
+def _model_triangles(pairs):
+    canon = _model_canonical(pairs)
+    counts = {}
+    for a, b in canon:
+        for b2, c in canon:
+            if b2 == b and (a, c) in canon:
+                for v in (a, b, c):
+                    counts[v] = counts.get(v, 0) + 1
+    return counts
+
+
+def _model_clustering(pairs):
+    deg = {}
+    for a, b in _model_canonical(pairs):
+        deg[a] = deg.get(a, 0) + 1
+        deg[b] = deg.get(b, 0) + 1
+    tri = _model_triangles(pairs)
+    return {
+        v: (tri.get(v, 0), d, math.floor(2.0 * tri.get(v, 0) / (d * (d - 1)) * 10000) / 10000.0)
+        for v, d in deg.items()
+        if d >= 2
+    }
+
+
+def _model_components(pairs):
+    """Every non-NULL endpoint is a vertex (a self-loop names one);
+    component = min key reachable over edges with two endpoints."""
+    parent = {}
+
+    def find(v):
+        while parent[v] != v:
+            v = parent[v]
+        return v
+
+    for x, y in pairs:
+        for v in (x, y):
+            if v is not None:
+                parent.setdefault(v, v)
+    for x, y in pairs:
+        if x is not None and y is not None:
+            rx, ry = find(x), find(y)
+            parent[max(rx, ry)] = min(rx, ry)
+    return {v: find(v) for v in parent}
+
+
+@pytest.mark.parametrize("shape", sorted(DEGENERATE_EDGE_SETS))
+class TestDegenerateEdgeSets:
+    def test_undirect(self, spark, shape):
+        pairs = DEGENERATE_EDGE_SETS[shape]
+        got = algorithms.undirect(_edges(spark, pairs)).collect()
+        assert len(got) == len({tuple(r) for r in got})
+        assert {tuple(r) for r in got} == _model_undirect(pairs)
+
+    def test_triangle_count(self, spark, shape):
+        pairs = DEGENERATE_EDGE_SETS[shape]
+        got = algorithms.triangle_count(_edges(spark, pairs)).collect()
+        assert {r.key: r.triangles for r in got} == _model_triangles(pairs)
+
+    def test_clustering_coefficient(self, spark, shape):
+        pairs = DEGENERATE_EDGE_SETS[shape]
+        got = algorithms.clustering_coefficient(_edges(spark, pairs)).collect()
+        assert {
+            r.key: (r.triangles, r.deg, r.lcc) for r in got
+        } == _model_clustering(pairs)
+
+    def test_connected_components(self, spark, shape):
+        pairs = DEGENERATE_EDGE_SETS[shape]
+        e = spark.createDataFrame(pairs, "source_key string, sink_key string")
+        got = traversal.connected_components(e).collect()
+        assert {r.key: r.component for r in got} == _model_components(pairs)
+        assert len(got) == len(_model_components(pairs))

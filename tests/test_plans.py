@@ -5,6 +5,8 @@ the plan — a correctness-preserving change that loses them is a perf bug.
 
 from __future__ import annotations
 
+import re
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -886,6 +888,71 @@ class TestRound7ThirdWavePlans:
         assert "BatchEvalPython" not in plan
         assert plan.count("HashAggregate") >= 2
         assert "ExistingRDD" in plan  # runs off the checkpointed visited set
+
+
+class TestGraphBuildOnce:
+    """Each graph-analytics edge set is built with one scan and one
+    dedup, and G3's label-propagation loop is planned at the graph's
+    derived partition count."""
+
+    def test_g17_final_plan_scans_lineitem_at_most_twice_no_cache(
+        self, spark, sf_dir
+    ):
+        """The canonical edge set feeds the wedge join's three roles and
+        the degree count without a cache; AQE reuses its dedup Exchange
+        across the join roles, so the final adaptive plan reads
+        ``lineitem`` at most twice (once per side of the degree join)."""
+        df = registry.QUERIES["G17_clustering_coeff"](spark, sf_dir)
+        df.collect()
+        plan = df._jdf.queryExecution().explainString(
+            spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
+                "formatted"
+            )
+        )
+        assert "isFinalPlan=true" in plan
+        assert "InMemoryRelation" not in plan, plan
+        final = plan.split("== Final Plan ==")[1].split("== Initial Plan ==")[0]
+        scans = set(re.findall(r"Scan parquet\s+\((\d+)\)", final))
+        details = {
+            n: plan.split(f"({n}) Scan parquet")[1].split("\n(")[0]
+            for n in scans
+        }
+        assert all("lineitem" in d for d in details.values()), details
+        assert 1 <= len(scans) <= 2, final
+
+    def test_g3_rounds_plan_at_derived_partition_count(
+        self, spark, sf_dir, monkeypatch
+    ):
+        """Every Exchange of every G3 round lands at the derived count
+        (1 partition for the 30-edge nation/region graph), in the style
+        of ``TestShuffleScope``: none at the session's count."""
+        from biodiversity_graph_db_spark.graph import traversal
+
+        session = int(spark.conf.get("spark.sql.shuffle.partitions"))
+        assert session != 1
+        plans = []
+        real_cut = traversal.cut
+
+        def recording_cut(df):
+            plans.append(
+                df._jdf.queryExecution().explainString(
+                    spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
+                        "formatted"
+                    )
+                )
+            )
+            return real_cut(df)
+
+        monkeypatch.setattr(traversal, "cut", recording_cut)
+        registry.QUERIES["G3_connected_components"](spark, sf_dir).collect()
+        assert plans
+        counts = {
+            int(n)
+            for p in plans
+            for n in re.findall(r"hashpartitioning\([^()]+, (\d+)\)", p)
+        }
+        assert counts == {1}, counts
+        assert spark.conf.get("spark.sql.shuffle.partitions") == str(session)
 
 
 class TestRound7FourthWavePlans:
